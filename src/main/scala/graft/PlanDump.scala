@@ -41,7 +41,6 @@ object PlanDump {
         catch { case e: Throwable => s"EXPLAIN FAILED: $e" }
       val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
       java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
-      println(s"wrote $p (${txt.length} chars)")
     }
     spark.stop()
   }

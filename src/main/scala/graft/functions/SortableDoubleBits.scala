@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * magnitude order so more-negative sorts lower, while the kept sign bit
   * keeps them below every positive.
   *
-  * Why it exists: [[graft.ops.exactPercentilesWith]]'s bucket census
-  * needs a VALUE-MONOTONE row → bucket function. Deriving buckets as
+  * Why it exists: the bucket census of
+  * [[graft.ops.gridBucketPercentilesWith]]'s continuous chains needs a
+  * VALUE-MONOTONE row → bucket function. Deriving buckets as
   * `floor((v−min)/width)` needs a min/max bounds pass first — a full
   * corpus scan + group exchange + broadcast spent only on bucket
   * geometry. `sortableBits(v) >> shift` is monotone BY CONSTRUCTION with

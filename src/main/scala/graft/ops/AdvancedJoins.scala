@@ -105,33 +105,22 @@ object AdvancedJoins {
 
   /** Exact percentiles (median / p90) per return flag — linear
     * interpolation, same formula in both engines, rounded to 6.
-    * Computed by the sorted-rank plan ([[graft.ops.exactPercentiles]]):
-    * one group-key exchange + window ranks instead of `percentile()`'s
-    * boxed value-list buffers (2.0 → ~0.6 s at sf0.1, same values —
-    * the helper reproduces the aggregate's interpolation expression
-    * bit-identically). Both value columns are non-null in lineitem. */
+    * Computed by narrow per-column chains
+    * ([[graft.ops.gridBucketPercentiles]]): l_quantity is a 50-value
+    * grid, resolved census-only; l_extendedprice is effectively
+    * continuous, bucket census + refinement. No `percentile()` boxed
+    * value-list buffers (2.0 s at sf0.1; these chains ~0.6 s, BENCH_NOTES
+    * r20), same values — the helper reproduces the aggregate's
+    * interpolation expression bit-identically. Both value columns are
+    * non-null in lineitem. */
   def percentiles(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, dir)
-    // Default arm: narrow per-column chains (graft.ops
-    // .gridBucketPercentiles — l_quantity is a 50-value grid, resolved
-    // census-only; l_extendedprice is effectively continuous, bucket
-    // census + refinement). SPARK_GRAFT_AB_PCT=sorted is the BENCH_NOTES
-    // control arm: the r15 unified-explode sorted-rank plan, kept
-    // re-measurable for the r20 A/B (0.95 → 0.62 s in-shell min-of-5).
-    val arm =
-      if (sys.env.get("SPARK_GRAFT_AB_PCT").contains("sorted"))
-        exactPercentiles(li, "l_returnflag", Seq(
+    gridBucketPercentiles(li, "l_returnflag",
+        gridSpecs = Seq(
           ("l_quantity", 0.5, "p50_qty"),
-          ("l_quantity", 0.9, "p90_qty"),
-          ("l_extendedprice", 0.5, "p50_price")))
-      else
-        gridBucketPercentiles(li, "l_returnflag",
-          gridSpecs = Seq(
-            ("l_quantity", 0.5, "p50_qty"),
-            ("l_quantity", 0.9, "p90_qty")),
-          contSpecs = Seq(("l_extendedprice", 0.5, "p50_price")))
-    arm
+          ("l_quantity", 0.9, "p90_qty")),
+        contSpecs = Seq(("l_extendedprice", 0.5, "p50_price")))
       .select(col("l_returnflag"),
         round(col("p50_qty"), 6).as("p50_qty"),
         round(col("p90_qty"), 6).as("p90_qty"),

@@ -201,45 +201,24 @@ object Aggregations {
     // every row updates exactly ONE unconditional HLL instead of
     // evaluating two `when` guards per row — the 6-row by-tag frame
     // then folds to the 3-row wide shape in a free post-exchange
-    // aggregate. SPARK_GRAFT_AB_AD=legacy keeps the r18 explode+
-    // conditional-sketch arm re-measurable (BENCH_NOTES r20).
-    if (sys.env.get("SPARK_GRAFT_AB_AD").contains("legacy")) {
-      val pairs = li.select(col("l_returnflag"), explode(array(
-          struct(lit("o").as("t"), col("l_orderkey").as("v")),
-          struct(lit("p").as("t"), col("l_partkey").as("v")))).as("tv"))
-        .select(col("l_returnflag"), col("tv.t").as("t"), col("tv.v").as("v"))
-        .distinct()
-      pairs.groupBy(col("l_returnflag"))
-        .agg(
-          count(when(col("t") === "o", 1)).as("exact_orders"),
-          count(when(col("t") === "p", 1)).as("exact_parts"),
-          approx_count_distinct(when(col("t") === "o", col("v")), 0.02).as("ao"),
-          approx_count_distinct(when(col("t") === "p", col("v")), 0.02).as("ap"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
-            col("exact_orders") <= 0.10).as("orders_ok"),
-          (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
-            col("exact_parts") <= 0.10).as("parts_ok"))
-        .sortSmall(col("l_returnflag"))
-    } else {
-      val pairs = li.selectExpr("l_returnflag",
-          "stack(2, 'o', l_orderkey, 'p', l_partkey) as (t, v)")
-        .distinct()
-      val byTag = pairs.groupBy(col("l_returnflag"), col("t"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(col("v"), 0.02).as("a"))
-      byTag.groupBy(col("l_returnflag"))
-        .agg(max(when(col("t") === "o", col("n"))).as("exact_orders"),
-          max(when(col("t") === "p", col("n"))).as("exact_parts"),
-          max(when(col("t") === "o", col("a"))).as("ao"),
-          max(when(col("t") === "p", col("a"))).as("ap"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
-            col("exact_orders") <= 0.10).as("orders_ok"),
-          (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
-            col("exact_parts") <= 0.10).as("parts_ok"))
-        .sortSmall(col("l_returnflag"))
-    }
+    // aggregate (BENCH_NOTES r20).
+    val pairs = li.selectExpr("l_returnflag",
+        "stack(2, 'o', l_orderkey, 'p', l_partkey) as (t, v)")
+      .distinct()
+    val byTag = pairs.groupBy(col("l_returnflag"), col("t"))
+      .agg(count(lit(1)).as("n"),
+        approx_count_distinct(col("v"), 0.02).as("a"))
+    byTag.groupBy(col("l_returnflag"))
+      .agg(max(when(col("t") === "o", col("n"))).as("exact_orders"),
+        max(when(col("t") === "p", col("n"))).as("exact_parts"),
+        max(when(col("t") === "o", col("a"))).as("ao"),
+        max(when(col("t") === "p", col("a"))).as("ap"))
+      .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
+        (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
+          col("exact_orders") <= 0.10).as("orders_ok"),
+        (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
+          col("exact_parts") <= 0.10).as("parts_ok"))
+      .sortSmall(col("l_returnflag"))
   }
 
   val approxDistinctSql: String =
@@ -260,53 +239,28 @@ object Aggregations {
   def approxQuantiles(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, dir)
-    // Two branches joined on the 3-row group key: the GK sketches run as
-    // a normal partial→final aggregate (mergeable fixed-size buffers —
-    // exactly what quantile sketches are FOR; map-side parallel, the
-    // exchange carries 3 sketches per input partition), while the exact
-    // reference values come from the sorted-rank plan
-    // ([[graft.ops.exactPercentiles]]) instead of `percentile()`'s boxed
-    // value-list buffers (the earlier repartition+COMPLETE-mode variant
-    // serialized nothing but still single-tasked each group through the
-    // list accumulation: 2.4 s for a 3-row output; this shape ~0.8 s).
-    // (r15) The exact plan's bounds pass no longer exists (fixed
-    // sortable-bits buckets), so the GK buffers run as the sibling
-    // group aggregate extraAggs now provides.
-    // r21: the exact side moves to the NARROW-CHAIN plan
-    // (gridBucketPercentilesWith — the shape agg_percentiles adopted in
-    // r19: l_quantity is a 50-value grid resolved census-only,
-    // l_extendedprice keeps bucket census + refinement), and the GK
-    // sketch extras ride its join-free union fold instead of
-    // exactPercentilesWith's broadcast-join assembly: the broadcast
-    // build re-executed the extras subtree as a separate
-    // prepare-time job. Interleaved QBench min-of-7 at sf0.1:
-    // 0.626 → 0.461 s, jobs 3 → 2; SPARK_GRAFT_AB_AQ=unified keeps the
-    // r15 arm re-measurable.
-    val fused =
-      if (sys.env.get("SPARK_GRAFT_AB_AQ").contains("unified"))
-        exactPercentilesWith(li, "l_returnflag", Seq(
+    // ONE narrow-chain exact plan with the GK sketches riding it
+    // ([[graft.ops.gridBucketPercentilesWith]], the shape agg_percentiles
+    // adopted in r19): l_quantity is a 50-value grid resolved
+    // census-only, l_extendedprice keeps bucket census + refinement, and
+    // the sketch extras (mergeable fixed-size buffers — exactly what
+    // quantile sketches are FOR; map-side parallel) join the percentile
+    // chains in the join-free union fold instead of a broadcast-join
+    // assembly, whose build re-executed the extras subtree as a separate
+    // prepare-time job. Exact values never go through `percentile()`'s
+    // boxed value-list buffers (2.4 s for a 3-row output). r21
+    // interleaved QBench min-of-7 at sf0.1: 0.626 → 0.461 s, jobs 3 → 2.
+    gridBucketPercentilesWith(li, "l_returnflag",
+        gridSpecs = Seq(("l_quantity", 0.5, "emq")),
+        contSpecs = Seq(
           ("l_extendedprice", 0.5, "eq50"),
           ("l_extendedprice", 0.9, "eq90"),
-          ("l_extendedprice", 0.99, "eq99"),
-          ("l_quantity", 0.5, "emq")),
-          Seq(
-            (expr("approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99), 2000)"),
-              "aq"),
-            (expr("approx_percentile(l_quantity, 0.5, 2000)"), "amq"),
-            (count(lit(1)), "n_rows")))
-      else
-        gridBucketPercentilesWith(li, "l_returnflag",
-          gridSpecs = Seq(("l_quantity", 0.5, "emq")),
-          contSpecs = Seq(
-            ("l_extendedprice", 0.5, "eq50"),
-            ("l_extendedprice", 0.9, "eq90"),
-            ("l_extendedprice", 0.99, "eq99")),
-          extraAggs = Seq(
-            (expr("approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99), 2000)"),
-              "aq"),
-            (expr("approx_percentile(l_quantity, 0.5, 2000)"), "amq"),
-            (count(lit(1)), "n_rows")))
-    fused
+          ("l_extendedprice", 0.99, "eq99")),
+        extraAggs = Seq(
+          (expr("approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99), 2000)"),
+            "aq"),
+          (expr("approx_percentile(l_quantity, 0.5, 2000)"), "amq"),
+          (count(lit(1)), "n_rows")))
       .select(col("l_returnflag"), col("n_rows"),
         (abs(col("aq")(0) - col("eq50")) / col("eq50") <= 0.05).as("q50_ok"),
         (abs(col("aq")(1) - col("eq90")) / col("eq90") <= 0.05).as("q90_ok"),

@@ -21,12 +21,11 @@ import org.apache.spark.sql.functions._
   * frame's exchange is one reused subtree across rounds, and the
   * per-round broadcast build jobs re-executed prior rounds' chains —
   * 40% off the entry locally AND the posture that survives a rank table
-  * too big to broadcast; `SPARK_GRAFT_PR_BROADCAST=on` re-measures the
-  * broadcast arm). Unrolling is
-  * deliberate for a FIXED iteration count (no lineage growth to manage —
-  * the iterative-loop machinery with localCheckpoint truncation lives in
-  * [[Dedup.labelPropagationCC]]); a convergence-driven variant would add
-  * the checkpoint cadence, not change the per-round dataflow.
+  * too big to broadcast). Unrolling is deliberate for a FIXED iteration
+  * count (no lineage growth to manage — the iterative-loop machinery
+  * with localCheckpoint truncation lives in [[Dedup.labelPropagationCC]]);
+  * a convergence-driven variant would add the checkpoint cadence, not
+  * change the per-round dataflow.
   */
 object Graph {
 
@@ -74,13 +73,8 @@ object Graph {
     // rank exchange is node-sized and the persisted edge frame's
     // exchange is one reused subtree). Also the 100 TB posture: the
     // rank table is node-cardinality and has no business broadcasting.
-    // SPARK_GRAFT_PR_BROADCAST=on keeps the broadcast arm re-measurable
-    // (value-identical — join strategy hints only).
-    val prBroadcast =
-      sys.env.get("SPARK_GRAFT_PR_BROADCAST").contains("on")
     val rFinal = (1 to Rounds).foldLeft(r0) { (r, _) =>
-      val rr = if (prBroadcast) broadcast(r) else r.hint("shuffle_hash")
-      ed.join(rr, col("src") === col("node"))
+      ed.join(r.hint("shuffle_hash"), col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(expr("r div deg")).as("inc"), max(col("nn")).as("nn"))
         .select(col("dst").as("node"),
@@ -428,47 +422,36 @@ object Graph {
     // (= 30), so the collected array is constant-size — the same
     // bounded-collect posture as the banding recount — and it rides the
     // exchange the capping window already established (groupBy(a) over
-    // a-partitioned input adds no shuffle). The join arm materialized
+    // a-partitioned input adds no shuffle). The self-join materialized
     // |N(a)|² rows per node and THEN filtered the l.b < r.b half; the
     // sorted-array slice emits exactly the i<j half, with no join
     // machinery (SMJ merge or hash probe) at all. Plan: 1 SMJ + filter →
     // generate-over-aggregate, same two exchanges
-    // (plans/r20/graph_link_prediction_{before,after}.txt).
-    // SPARK_GRAFT_AB_LP=join keeps the self-join arm re-measurable
-    // (QBench min-of-7 at sf0.1: join 0.387/med 0.474 → array 0.334/med
-    // 0.392); GraphSpec pins arm parity.
-    val wedges = lpWedges(adj,
-      useJoin = sys.env.get("SPARK_GRAFT_AB_LP").contains("join"))
+    // (plans/r20/graph_link_prediction_{before,after}.txt; QBench
+    // min-of-7 at sf0.1: join 0.387/med 0.474 → array 0.334/med 0.392).
+    val wedges = lpWedges(adj)
     wedges.join(edges,
         wedges("u") === edges("a") && wedges("v") === edges("b"), "left_anti")
       .orderBy(col("common_neighbors").desc, col("u"), col("v"))
       .limit(20)
   }
 
-  /** Test seam: both wedge arms (r20 array expansion vs the legacy
-    * self-join) so GraphSpec can pin their parity in one JVM. */
-  private[ops] def lpWedges(adj: DataFrame, useJoin: Boolean): DataFrame =
-    if (useJoin)
-      adj.as("l").join(adj.as("r"), col("l.a") === col("r.a"))
-        .filter(col("l.b") < col("r.b"))
-        .groupBy(col("l.b").as("u"), col("r.b").as("v"))
-        .agg(count(lit(1)).as("common_neighbors"))
-    else
-      // DISTINCT-NEIGHBOR INVARIANT (r20 ADVICE): this arm equals the
-      // join arm's strict l.b < r.b only because adjacency lists are
-      // duplicate-free — `adj` derives from cooccurrenceEdges' groupBy
-      // (a, b) (and the MaxNeighbors window keeps one row per (a, b)), so
-      // collect_list never sees a repeated neighbor. A duplicated b would
-      // emit u == v self-pairs here that the join arm excludes; any new
-      // caller must feed a deduplicated adjacency or switch to
-      // collect_set.
-      adj.groupBy(col("a"))
-        .agg(sort_array(collect_list(col("b"))).as("ds"))
-        .filter(size(col("ds")) >= 2)
-        .select(col("ds"), posexplode(col("ds"))).toDF("ds", "i", "u")
-        .select(col("u"), explode(expr("slice(ds, i + 2, size(ds))")).as("v"))
-        .groupBy(col("u"), col("v"))
-        .agg(count(lit(1)).as("common_neighbors"))
+  /** Common-neighbor counts of every i<j neighbor pair, by in-array pair
+    * expansion. DISTINCT-NEIGHBOR INVARIANT (r20 ADVICE): this equals
+    * the self-join's strict l.b < r.b only because adjacency lists are
+    * duplicate-free — `adj` derives from cooccurrenceEdges' groupBy
+    * (a, b) (and the MaxNeighbors window keeps one row per (a, b)), so
+    * collect_list never sees a repeated neighbor. A duplicated b would
+    * emit u == v self-pairs; any new caller must feed a deduplicated
+    * adjacency or switch to collect_set. */
+  private[ops] def lpWedges(adj: DataFrame): DataFrame =
+    adj.groupBy(col("a"))
+      .agg(sort_array(collect_list(col("b"))).as("ds"))
+      .filter(size(col("ds")) >= 2)
+      .select(col("ds"), posexplode(col("ds"))).toDF("ds", "i", "u")
+      .select(col("u"), explode(expr("slice(ds, i + 2, size(ds))")).as("v"))
+      .groupBy(col("u"), col("v"))
+      .agg(count(lit(1)).as("common_neighbors"))
 
   val linkPredictionSql: String =
     s"""WITH ${coocEdgesSqlPrelude("edges")},
@@ -521,22 +504,13 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val d0 = ev.agg(concat(lit("u:"), min(col("user_id"))).as("node"))
       .select(col("node"), lit(0).as("dist"))
-    // SPARK_GRAFT_BFS_BROADCAST=on: the A/B arm (VERDICT r16 task 5) —
-    // broadcast the distance table into a map-side join instead of the
-    // shuffle-hash exchange, with a lazy localCheckpoint per round to
-    // truncate lineage (without it, round r's broadcast variable
-    // re-executes rounds 1..r-1's whole chain — the quadratic recompute
-    // that made the r15 broadcast shape lose). Value-identical by
-    // construction (same expand/union/min-combine per round). Kept off
-    // by default: the distance table converges to ALL nodes and the
-    // user partition scales with the corpus, so broadcasting it is not
-    // the 100 TB posture — at cluster scale AQE makes the
-    // small-frontier broadcast call adaptively per round instead.
-    // Measured min-of-5 A/B at sf0.1 in BENCH_NOTES r17.
-    val bfsBroadcast = sys.env.get("SPARK_GRAFT_BFS_BROADCAST").contains("on")
+    // Shuffle-hash distance join, not a broadcast: the distance table
+    // converges to ALL nodes and the user partition scales with the
+    // corpus, so broadcasting it is not the 100 TB posture — at cluster
+    // scale AQE makes the small-frontier broadcast call adaptively per
+    // round instead (broadcast + localCheckpoint A/B: BENCH_NOTES r17).
     val dFinal = (1 to BfsRounds).foldLeft(d0) { (d, _) =>
-      val dd = if (bfsBroadcast) broadcast(d) else d.hint("shuffle_hash")
-      val nxt = edges.join(dd, col("src") === col("node"))
+      val nxt = edges.join(d.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
       val merged =
         d.union(nxt).groupBy(col("node")).agg(min(col("dist")).as("dist"))
@@ -547,8 +521,7 @@ object Graph {
       // × floor in recompute. The persist stays lazy (no eager barrier,
       // still ONE job); round r+1 reads the round-r cache instead of its
       // lineage. Min-of-5 A/B at sf0.1: 1.13 → 0.73 s, identical rows.
-      if (bfsBroadcast) merged.localCheckpoint(false)
-      else merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // Remaining jobs audit (r19 VERDICT task 6): listener-traced at
     // sf0.1 — job 1 is the events parquet footer/schema read (the nanos
@@ -604,19 +577,19 @@ object Graph {
     * point sf0.1 collapses to an empty core by round 3, sf0.01 cascades
     * 145→20 nodes, both oracle-reproduced).
     *
-    * Plan: each round is one windowed pass over the round-start edge
-    * set — both endpoint degrees (one sort-exchange per endpoint key)
-    * plus an rn=1 node marker riding the a-side exchange — so the
-    * per-round census is a no-exchange rollup of the same persisted
-    * frame, the peel filter (degrees ≥ k on BOTH endpoints, judged on
-    * the round-start set = the simultaneous peel) yields the next
-    * round, and the whole 5-round trajectory runs as ONE lazily-
-    * persisted job with no eager barriers and no data-dependent
-    * broadcast subtrees. k is the exact median degree, computed from
-    * the degree-domain HISTOGRAM (broadcast ≤-self-join cumulative, no
-    * single-partition window) and held as a driver scalar. At cluster
-    * scale the executor-loss-safe variant adds reliable checkpoint()
-    * at a 2-round cadence — same dataflow. */
+    * Plan: each round is one map-side-combined degree aggregate over
+    * the round-start edge set; the per-round census is a 1-row rollup
+    * of that node-sized table, and the peel (degrees ≥ k on BOTH
+    * endpoints, judged on the round-start set = the simultaneous peel)
+    * is two shuffle-hash semi-joins of the edge set against the
+    * surviving nodes. Every round is a lazy localCheckpoint, so the
+    * whole 5-round trajectory runs as ONE job with no eager barriers
+    * and no data-dependent broadcast subtrees. k is the exact median
+    * degree, computed from the degree-domain HISTOGRAM (one
+    * single-partition cumulative window over the degree domain) and
+    * held as a driver scalar. At cluster scale the executor-loss-safe
+    * variant adds reliable checkpoint() at a 2-round cadence — same
+    * dataflow. */
   def kcorePeel(spark: SparkSession, dir: String): DataFrame = {
     val e0 = cooccurrenceEdges(spark, dir)
     val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
@@ -654,36 +627,20 @@ object Graph {
       .head()
     // empty graph ⇒ no median; any k yields the same all-zero census
     val k = if (kRow.isNullAt(0)) 0L else kRow.getLong(0)
-    // Round body: each windowed pass over the round-start edge set
-    // computes BOTH endpoint degrees (one sort-exchange per endpoint
-    // key) AND an rn=1 node marker riding the a-side exchange for free
-    // — so the per-round census is a no-exchange rollup of the SAME
-    // persisted frame (nodes = rn=1 rows, Σda = 2·edges, min(da) =
-    // min degree), and the peel filter (da ≥ k AND db ≥ k, round-start
-    // degrees on both endpoints = the simultaneous peel) yields the
-    // next round. Everything after the k-scalar collect is LAZY
-    // persists, so the whole 5-round trajectory runs as ONE job whose
-    // shuffle stages the scheduler dedups (unlike broadcast subtrees,
-    // which race). A/B history at sf0.1 (QBench mins): eager per-round
-    // checkpoints + separate census exchanges 5.3 s → lazy windows
-    // 3.9 s → this shape (census fused into the window pass, median-k
-    // as histogram + driver scalar); the agg+broadcast-semi-join round
-    // body is the 100 TB alternative when edges ≫ memory but nodes
-    // broadcast — same trajectory, keyed-exchange-free rounds.
     // Round body: ONE map-side-combined degree aggregate per round (the
     // node-sized `deg` table), from which BOTH the census (a 1-row
     // rollup: nodes = rows, Σd = 2·edges, min(d)) and the peel derive —
-    // survivors are the d ≥ k nodes, broadcast back onto the edge set as
-    // two node-keyed semi-joins (degrees judged on the round-start set =
-    // the simultaneous peel). This replaces the earlier windowed form
+    // survivors are the d ≥ k nodes, semi-joined back onto the edge set
+    // on both endpoints (degrees judged on the round-start set = the
+    // simultaneous peel; shuffle-hash, see below). This replaces the earlier windowed form
     // (two full sort-exchanges of the edge set per round, to attach
     // per-edge da/db/rn columns the census then mostly discarded): the
     // degree domain is nodes ≪ edges, so the only per-round exchange is
     // the combine-shrunk degree agg and the edge set itself never
-    // re-sorts. This is exactly the 100 TB posture (edges ≫ memory,
-    // node table broadcasts); on a graph whose node table cannot
-    // broadcast, the two semi-joins degrade to shuffles on a/b — same
-    // trajectory, keyed exchanges.
+    // re-sorts (the 100 TB posture: edges ≫ memory). A/B history at sf0.1 (QBench mins):
+    // eager per-round checkpoints + separate census exchanges 5.3 s →
+    // lazy windows 3.9 s → census fused into the window pass, median-k
+    // as histogram + driver scalar → this degree-aggregate round body.
     //
     // Each round's edge set and degree table go through LAZY
     // localCheckpoint, not persist: a persisted round still nests every
@@ -724,14 +681,9 @@ object Graph {
         // exchanges are the documented degradation path anyway; on a
         // cluster where the node table broadcasts, AQE's runtime
         // broadcast switch restores the map-side join per round.
-        // SPARK_GRAFT_KCORE_SEMI=broadcast re-measures the r20 arm.
         val keep = deg.filter(col("d") >= lit(k)).select(col("a").as("__keep"))
-        val kcoreBroadcast =
-          sys.env.get("SPARK_GRAFT_KCORE_SEMI").contains("broadcast")
-        def side() = if (kcoreBroadcast) broadcast(keep)
-          else keep.hint("shuffle_hash")
-        e = e.join(side(), col("a") === col("__keep"), "left_semi")
-          .join(side(), col("b") === col("__keep"), "left_semi")
+        e = e.join(keep.hint("shuffle_hash"), col("a") === col("__keep"), "left_semi")
+          .join(keep.hint("shuffle_hash"), col("b") === col("__keep"), "left_semi")
           .localCheckpoint(false)
       }
       census

@@ -59,18 +59,10 @@ object Similarity {
     // after runs over ≤ 5 rows per query.
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
-    // SPARK_GRAFT_AB_COSINE=window is the BENCH_NOTES control arm: the
-    // pre-r14 full window-sort formulation, kept timeable so the heap
-    // node's win stays a measured number, not a remembered one.
-    if (sys.env.get("SPARK_GRAFT_AB_COSINE").contains("window"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .orderBy(col("query_id"), col("rnk"))
-    else
-      graft.plans.GraftOps.topKPerGroup(scored, Seq("query_id"),
-          Seq(("cos_sim", true), ("vec_id", false)), 5)
-        .withColumn("rnk", row_number().over(w))
-        .orderBy(col("query_id"), col("rnk"))
+    graft.plans.GraftOps.topKPerGroup(scored, Seq("query_id"),
+        Seq(("cos_sim", true), ("vec_id", false)), 5)
+      .withColumn("rnk", row_number().over(w))
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   val cosineTopKSql: String =
@@ -971,44 +963,22 @@ object Similarity {
     * rows (8·10¹⁰ at sf100: the join is cheap per row but the
     * materialized stream is quadratic BY WORKLOAD since the query set
     * here scales with the corpus). Classical ADC pays O(corpus·queries)
-    * table LOOKUPS; for top-k the factored plan does strictly less. */
-  private def pqAdcTopK(codes: DataFrame, scores: DataFrame,
-      codeCols: Seq[String], k: Int): DataFrame = {
-    // SPARK_GRAFT_AB_ADC=join is the BENCH_NOTES control arm: the r13
-    // formulation (equi-join scores back to the full code table, rank
-    // corpus × queries rows per query) kept timeable for the A/B table.
-    if (sys.env.get("SPARK_GRAFT_AB_ADC").contains("join")) {
-      val wr = Window.partitionBy(col("query_id"))
-        .orderBy(col("approx_dot").desc, col("vec_id"))
-      return codes.join(scores, codeCols)
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), col("approx_dot"))
-        .withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= k)
-    }
-    val counts = codes.groupBy(codeCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val members = graft.plans.GraftOps.topKPerGroup(
-      codes, codeCols, Seq(("vec_id", false)), k + 1)
-    pqAdcTopKFrom(scores.join(broadcast(counts), codeCols), members,
-      codeCols, k)
-  }
-
-  /** Factored ADC top-k fed from MEMOIZED census/member index state —
-    * the r19 re-run of the r14 factored-vs-score-join A/B under the r18
-    * memo regime: the per-code census and the member prefixes are PQ
-    * index state (qmod-independent, the same side of the memo line as
-    * the code tables), so the per-rep query cost is the queries×4096
-    * score broadcast + the threshold window + one member join — the
-    * corpus is not scanned at all once the index is built. The memo TAGS
-    * are the eval tier's: pqSeeds is prefix-consistent (first-k corpus
-    * vectors), so the k=[[PqK]] codebook — and therefore the census and
-    * prefixes — are byte-identical whichever path builds them first, and
-    * the ADC query and the recall evals share one checkpoint. The
-    * eval-length (AnnEvalTopK+1)-row prefix is a SUPERSET of the k+1
-    * this query needs: members of one code share approx_dot, so rows
-    * past the (k+1)-smallest ids are dominated within their code and
-    * can never enter the top-k (oracle-checked — same output). */
+    * table LOOKUPS; for top-k the factored plan does strictly less.
+    *
+    * The census and the member prefixes are MEMOIZED PQ index state
+    * (r19, re-run of the r14 A/B under the r18 memo regime):
+    * qmod-independent, the same side of the memo line as the code
+    * tables, so the per-rep query cost is the queries×4096 score
+    * broadcast + the threshold window + one member join — the corpus is
+    * not scanned at all once the index is built. The memo TAGS are the
+    * eval tier's: pqSeeds is prefix-consistent (first-k corpus vectors),
+    * so the k=[[PqK]] codebook — and therefore the census and prefixes —
+    * are byte-identical whichever path builds them first, and the ADC
+    * query and the recall evals share one checkpoint. The eval-length
+    * (AnnEvalTopK+1)-row prefix is a SUPERSET of the k+1 this query
+    * needs: members of one code share approx_dot, so rows past the
+    * (k+1)-smallest ids are dominated within their code and can never
+    * enter the top-k (oracle-checked — same output). */
   private def pqAdcTopKMemo(spark: SparkSession, dir: String,
       codes: => DataFrame, scores: DataFrame,
       codeCols: Seq[String], k: Int): DataFrame = {
@@ -1022,23 +992,10 @@ object Similarity {
       graft.plans.GraftOps.topKPerGroup(
         codes, codeCols, Seq(("vec_id", false)), AnnEvalTopK + 1)
     }
-    pqAdcTopKFrom(scores.join(broadcast(counts), codeCols), members,
-      codeCols, k)
-  }
-
-  /** [[pqAdcTopK]] with the per-code index state precomputed: `scored`
-    * must carry the per-code member count as `__cnt` (the observed-code
-    * census) and `members` the (k+1)-smallest member ids per code. The
-    * recall evals feed MEMOIZED census/member frames here (both are
-    * query-independent PQ index state, same side of the memo line as the
-    * code tables they derive from), so the per-rep sweep re-runs neither
-    * the census aggregate nor the member-prefix heap pass. */
-  private def pqAdcTopKFrom(scored: DataFrame, members: DataFrame,
-      codeCols: Seq[String], k: Int): DataFrame = {
     val wq = Window.partitionBy(col("query_id"))
     val wcum = wq.orderBy(col("approx_dot").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val kept = scored
+    val kept = scores.join(broadcast(counts), codeCols)
       .withColumn("__before", coalesce(sum(col("__cnt")).over(wcum), lit(0L)))
       .withColumn("__thr", min(when(col("__before") < k + 1,
         col("approx_dot"))).over(wq))
@@ -1083,14 +1040,7 @@ object Similarity {
     val scores = broadcast(queries).crossJoin(allCodes)
       .withColumn("approx_dot", round(dm(0) + dm(1) + dm(2) + dm(3), 6))
       .select((col("query_id") +: col("approx_dot") +: codeCols.map(col)): _*)
-    // default arm: memoized index state (pqAdcTopKMemo); the two control
-    // arms (score-join, unmemoized factored) stay re-measurable for the
-    // BENCH_NOTES A/B tables
-    val top = if (sys.env.get("SPARK_GRAFT_AB_ADC").exists(
-        v => v == "join" || v == "nomemo"))
-      pqAdcTopK(codes, scores, codeCols, 3)
-    else pqAdcTopKMemo(spark, dir, codes, scores, codeCols, 3)
-    top
+    pqAdcTopKMemo(spark, dir, codes, scores, codeCols, 3)
       .select(col("query_id"), col("vec_id"), col("approx_dot"), col("rnk"))
       .orderBy(col("query_id"), col("rnk"))
   }
@@ -1280,14 +1230,7 @@ object Similarity {
     annRecallEvalImpl(spark, dir, 1000L)
 
   private def annRecallEvalImpl(spark: SparkSession, dir: String,
-      qmod: Long): DataFrame =
-    annRecallEvalImpl(spark, dir, qmod,
-      !sys.env.get("SPARK_GRAFT_PQ_FUSED").contains("off"))
-
-  /** Test seam: `fusedPq` selects the PQ-family arm explicitly so the
-    * knob-arm parity pin can compare both in one JVM. */
-  private[ops] def annRecallEvalImpl(spark: SparkSession, dir: String,
-      qmod: Long, fusedPq: Boolean): DataFrame = {
+      qmod: Long): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val em = Tables.embeddings(spark, dir)
     val q = em.filter(pmod(col("vec_id"), lit(qmod)) === 0)
@@ -1379,27 +1322,18 @@ object Similarity {
     // to run the pipeline once before the main job, warming the caches
     // sequentially; this warming job does the same with ONLY the
     // candidate work (no recall joins, no cost union), so the final can
-    // take the 1-job local sort. SPARK_GRAFT_AB_EVAL_FINAL=orderby
-    // re-measures the r20 arm (no warming, ranged final) in-window.
-    val legacyEvalFinal =
-      sys.env.get("SPARK_GRAFT_AB_EVAL_FINAL").contains("orderby")
-    if (!legacyEvalFinal)
-      Seq(lshCand.select(col("query_id")), ivfCand.select(col("query_id")))
-        .reduce(_ union _)
-        .write.format("noop").mode("overwrite").save()
-    def evalFinal(df: DataFrame): DataFrame =
-      if (legacyEvalFinal) df.orderBy(col("method"), col("param"))
-      else df.sortSmall(col("method"), col("param"))
+    // take the 1-job local sort.
+    Seq(lshCand.select(col("query_id")), ivfCand.select(col("query_id")))
+      .reduce(_ union _)
+      .write.format("noop").mode("overwrite").save()
 
     // ---- PQ family: one seed collect at max k; codebook k = row prefix.
     // The r11 A/B left the per-k chains UNFUSED (3.6 → 4.4 s then:
     // every fused stage was resource-bound and serialization lost).
     // r18 re-ran the A/B after the census/member memoization (the frames
     // the fused chain re-reads are now checkpoint-borne, so the fused
-    // stages are floor-bound, not resource-bound) — see BENCH_NOTES r18
-    // for the adoption decision; SPARK_GRAFT_PQ_FUSED re-measures the
-    // losing arm. Both arms share the same memoized index state and are
-    // value-identical (oracle-checked under both knob settings).
+    // stages are floor-bound, not resource-bound) and adopted the fused
+    // tail — see BENCH_NOTES r18.
     val seeds = IndexMemo.value(spark, dir, s"pq_seeds:${PqEvalKs.max}") {
       pqSeeds(em, PqEvalKs.max)
     }
@@ -1431,7 +1365,7 @@ object Similarity {
       // prefixes, both qmod-independent) — memoized like the code table
       // they derive from, so the per-rep sweep re-runs neither the
       // census aggregate nor the member heap pass (r18: previously only
-      // the count-less distinct was memoized and pqAdcTopK re-aggregated
+      // the count-less distinct was memoized and the top-k re-aggregated
       // counts + members per rep, one census shuffle + one heap shuffle
       // + two broadcast jobs per k per rep)
       val counts = IndexMemo.df(spark, dir, s"pq_counts:$k") {
@@ -1444,96 +1378,48 @@ object Similarity {
       }
       (k, cb, counts, members)
     }
-    if (fusedPq) {
-      // ---- fused tail (adopted r18): ALL NINE operating points settle in
-      // one tagged recall join + one tagged cost union. Candidates
-      // normalize to (method, param, query_id, vec_id) — lsh/ivf pairs
-      // are unique per key by construction (one bucket per (param, vec),
-      // one cell per vec), pq's are a top-k — so the single left join
-      // cannot duplicate truth rows.
-      val (pqCand, pqCost) = pqFamilyFused(q, codeCols, pqState)
-      val candAll = lshCand
-        .select(lit("lsh").as("method"), col("param"), col("query_id"),
-          col("vec_id"))
-        .unionByName(ivfCandP.select(lit("ivf").as("method"), col("param"),
-          col("query_id"), col("vec_id")))
-        .unionByName(pqCand.select(lit("pq").as("method"), col("param"),
-          col("query_id"), col("vec_id")))
-        .withColumn("hit", lit(1))
-      val opPoints = Seq("lsh" -> lshParams, "ivf" -> IvfEvalProbes,
-        "pq" -> PqEvalKs).flatMap { case (m, ps) =>
-        ps.map(p => struct(lit(m).as("method"), lit(p).as("param")))
-      }
-      val rec = exactTop.select(col("query_id"), col("vec_id"),
-          explode(array(opPoints: _*)).as("mp"))
-        .select(col("mp.method").as("method"), col("mp.param").as("param"),
-          col("query_id"), col("vec_id"))
-        .join(candAll, Seq("method", "param", "query_id", "vec_id"),
-          "left_outer")
-        .groupBy(col("method"), col("param"))
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hits"))
-      val costAll = lshCost.select(lit("lsh").as("method"), col("param"),
-          col("cost"))
-        .unionByName(ivfCost.select(lit("ivf").as("method"), col("param"),
-          col("cost")))
-        .unionByName(pqCost.select(lit("pq").as("method"), col("param"),
-          col("cost")))
-      // sortSmall is safe HERE because the candidate frames are warmed
-      // explicitly above (r20's A/B showed the naive single-job final
-      // losing 0.745 → 0.954 min exactly because the orderBy's sampling
-      // job doubled as the cache warmer; see the warming note). 9-row
-      // operating-point census — domain-sized by construction.
-      evalFinal(rec.join(costAll, Seq("method", "param"))
-        .select(col("method"), col("param"), col("n_exact"), col("n_hits"),
-          expr("n_hits * 1000000 div n_exact").as("recall_fp"), col("cost")))
-    } else {
-      // ---- unfused control arm (the r11 shape, re-measurable behind
-      // SPARK_GRAFT_PQ_FUSED=off): per-family recall joins + per-k PQ
-      // subtrees, value-identical by AnnRecallEvalSpec's parity pin.
-      val lsh = exactTop.select(col("query_id"), col("vec_id"),
-          explodeParams(lshParams))
-        .join(lshCand, Seq("param", "query_id", "vec_id"), "left_outer")
-        .groupBy(col("param"))
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hits"))
-        .join(lshCost, Seq("param"))
-        .select(lit("lsh").as("method"), col("param"), col("n_exact"),
-          col("n_hits"), expr("n_hits * 1000000 div n_exact").as("recall_fp"),
-          col("cost"))
-      val ivf = exactTop.select(col("query_id"), col("vec_id"),
-          explodeParams(IvfEvalProbes))
-        .join(ivfCandP.withColumn("hit", lit(1)),
-          Seq("param", "query_id", "vec_id"), "left_outer")
-        .groupBy(col("param"))
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hits"))
-        .join(ivfCost, Seq("param"))
-        .select(lit("ivf").as("method"), col("param"), col("n_exact"),
-          col("n_hits"), expr("n_hits * 1000000 div n_exact").as("recall_fp"),
-          col("cost"))
-      val pqFamily = pqState.map { case (k, cb, counts, members) =>
-        // the census IS the score domain (same rows as the old distinct,
-        // plus __cnt), so the scores frame is born carrying the member
-        // counts and the per-rep counts equi-join disappears
-        val scores = broadcast(q).crossJoin(counts)
-          .withColumn("approx_dot",
-            round(pqAdcTerm(cb, 0) + pqAdcTerm(cb, 1) +
-              pqAdcTerm(cb, 2) + pqAdcTerm(cb, 3), 6))
-          .select(col("query_id") +: col("approx_dot") +: col("__cnt") +:
-            codeCols.map(col): _*)
-        // factored ADC top-k (see pqAdcTopKFrom) — never corpus × queries
-        val top5 = pqAdcTopKFrom(scores, members, codeCols, AnnEvalTopK)
-          .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-        val rec = exactTop.join(top5, Seq("query_id", "vec_id"), "left_outer")
-          .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hits"))
-        val cost = q.agg(count(lit(1)).as("nq"))
-          .crossJoin(counts.agg(count(lit(1)).as("nd")))
-          .select((col("nq") * col("nd")).as("cost"))
-        rec.crossJoin(cost)
-          .select(lit("pq").as("method"), lit(k).as("param"), col("n_exact"),
-            col("n_hits"), expr("n_hits * 1000000 div n_exact").as("recall_fp"),
-            col("cost"))
-      }
-      evalFinal((Seq(lsh, ivf) ++ pqFamily).reduce(_ union _))
+    // ---- fused tail (adopted r18): ALL NINE operating points settle in
+    // one tagged recall join + one tagged cost union. Candidates
+    // normalize to (method, param, query_id, vec_id) — lsh/ivf pairs
+    // are unique per key by construction (one bucket per (param, vec),
+    // one cell per vec), pq's are a top-k — so the single left join
+    // cannot duplicate truth rows.
+    val (pqCand, pqCost) = pqFamilyFused(q, codeCols, pqState)
+    val candAll = lshCand
+      .select(lit("lsh").as("method"), col("param"), col("query_id"),
+        col("vec_id"))
+      .unionByName(ivfCandP.select(lit("ivf").as("method"), col("param"),
+        col("query_id"), col("vec_id")))
+      .unionByName(pqCand.select(lit("pq").as("method"), col("param"),
+        col("query_id"), col("vec_id")))
+      .withColumn("hit", lit(1))
+    val opPoints = Seq("lsh" -> lshParams, "ivf" -> IvfEvalProbes,
+      "pq" -> PqEvalKs).flatMap { case (m, ps) =>
+      ps.map(p => struct(lit(m).as("method"), lit(p).as("param")))
     }
+    val rec = exactTop.select(col("query_id"), col("vec_id"),
+        explode(array(opPoints: _*)).as("mp"))
+      .select(col("mp.method").as("method"), col("mp.param").as("param"),
+        col("query_id"), col("vec_id"))
+      .join(candAll, Seq("method", "param", "query_id", "vec_id"),
+        "left_outer")
+      .groupBy(col("method"), col("param"))
+      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hits"))
+    val costAll = lshCost.select(lit("lsh").as("method"), col("param"),
+        col("cost"))
+      .unionByName(ivfCost.select(lit("ivf").as("method"), col("param"),
+        col("cost")))
+      .unionByName(pqCost.select(lit("pq").as("method"), col("param"),
+        col("cost")))
+    // sortSmall is safe HERE because the candidate frames are warmed
+    // explicitly above (r20's A/B showed the naive single-job final
+    // losing 0.745 → 0.954 min exactly because the orderBy's sampling
+    // job doubled as the cache warmer; see the warming note). 9-row
+    // operating-point census — domain-sized by construction.
+    rec.join(costAll, Seq("method", "param"))
+      .select(col("method"), col("param"), col("n_exact"), col("n_hits"),
+        expr("n_hits * 1000000 div n_exact").as("recall_fp"), col("cost"))
+      .sortSmall(col("method"), col("param"))
   }
 
   /** The three PQ operating points as ONE tagged dataflow (the
@@ -1543,11 +1429,10 @@ object Similarity {
     * each row only pays its own codebook), run ONE threshold window and
     * ONE member join and ONE top-k over (param, query_id). Returns the
     * tagged top-5 candidates and per-param costs; the caller settles
-    * recall in the all-family tagged join. Value-identical to the
-    * unfused per-k chains — same memoized state, same contract — but
-    * the per-rep sweep is one subtree instead of three (one members
-    * broadcast instead of three, one window/top-k stage chain instead
-    * of three). */
+    * recall in the all-family tagged join. Same memoized state and
+    * contract as three per-k [[pqAdcTopKMemo]] chains, but the per-rep
+    * sweep is one subtree instead of three (one members broadcast
+    * instead of three, one window/top-k stage chain instead of three). */
   private def pqFamilyFused(q: DataFrame,
       codeCols: Seq[String],
       state: Seq[(Int, Seq[Seq[Seq[Double]]], DataFrame, DataFrame)])
@@ -1560,8 +1445,8 @@ object Similarity {
     }.reduce(_ unionByName _)
     // Broadcast fence (r18 ADVICE): the fused members frame is the UNION
     // of all per-k member prefixes — up to Σ_k min(corpus, k^PqM) ×
-    // (AnnEvalTopK+1) rows, ~3× the largest per-k broadcast the unfused
-    // arm ships. The code-space term is a STATIC bound (no count job):
+    // (AnnEvalTopK+1) rows, ~3× the largest per-k member broadcast. The
+    // code-space term is a STATIC bound (no count job):
     // with the current eval widths it is ≤ (4⁴+8⁴+16⁴)·6 ≈ 420k rows
     // (~tens of MB, well inside a broadcast); a future k=64 family
     // (64⁴·6 ≈ 10⁸ rows) crosses the fence and the member join degrades

@@ -74,9 +74,6 @@ package object ops {
   def davg(c: Column): Column =
     sum(c.cast(DecimalType(18, 4))).cast(DoubleType) / count(lit(1))
 
-  /** Number of histogram cells per (group, value column) in
-    * [[exactPercentiles]] — sized so a refinement cell at sf0.1 holds
-    * ~75 rows; at any SF the census stays ≤ groups·vcols·cells rows. */
   /** Bucket id = `graft_sortable_bits(v) >> PctBktShift`: 2^(52−42) =
     * 1024 mantissa slices per binade. A money/quantity domain spanning
     * ≤8 binades occupies ≤8k buckets — the resolution the old
@@ -84,153 +81,11 @@ package object ops {
     * (the function is fixed) and exponent-adaptive balance under skew. */
   private val PctBktShift = 42
 
-  /** EXACT interpolated percentiles via histogram refinement — the
-    * distributed rank-selection plan (one bucket census + one targeted
-    * refinement, both map-side parallel) instead of Spark's
-    * `percentile()` aggregate, whose buffer is the full per-group value
-    * list: boxed, serialized across the exchange in partial mode, and
-    * group-cardinality-parallel (3 tasks here) after a pre-repartition —
-    * measured 1.8–2.4 s per query at sf0.1 for 3-row outputs.
-    *
-    * Plan: (1) bucket census: every value maps to a FIXED value-monotone
-    * bucket ([[graft.functions.SortableDoubleBits]] >> [[PctBktShift]] —
-    * monotone by construction, so no min/max bounds pass exists at all);
-    * ONE exploded count aggregate covers all value columns (≤
-    * groups·cols·occupied-cells rows after map-side combine); (2) the
-    * cumulative census (bucket-domain window, census-sized) locates the
-    * bucket holding each needed rank `floor/ceil(p·(n−1))+1`; (3)
-    * refinement re-scans the table once more and inner-joins the
-    * BROADCAST target locator on (group, col, bucket) — only target
-    * buckets' rows survive (~n/cells each, duplicated only when two
-    * targets share a bucket), ranked inside the bucket per target
-    * (global rank = census prefix + local rank — buckets are
-    * value-monotone, so this IS the global order), and assembles Spark
-    * `percentile`'s interpolation expression
-    * `(ceil−pos)·v_lo + (pos−floor)·v_hi` bit-identically, so oracle
-    * behavior matches the aggregate exactly. Every stage is
-    * row-parallel; nothing ever holds more than a census per task. At
-    * 100 TB this is the textbook exact-quantile shape: two scans, tiny
-    * exchanges, no single-task sort of a group. (r15: the bounds pass
-    * and the separate semi-join/locator-join pair were removed — 5 jobs
-    * / 11 stages → 2 jobs / 8 stages at sf0.1, see BENCH_NOTES r15.)
-    *
-    * Callers must have [[graft.functions.GraftFunctions.register]]ed the
-    * session (every inventory query does).
-    *
-    * `specs` = (valueColumn, p, outputName); value columns MUST be
-    * non-null (callers filter first — `percentile` ignores nulls, the
-    * shared counts here must too). One row per group, unrounded
-    * doubles. */
-  def exactPercentiles(df: org.apache.spark.sql.DataFrame, group: String,
-      specs: Seq[(String, Double, String)]): org.apache.spark.sql.DataFrame =
-    exactPercentilesWith(df, group, specs, Nil)
-
-  /** [[exactPercentiles]] with extra per-group aggregates computed in a
-    * sibling map-side-combined `groupBy(group)` over the same input
-    * (e.g. `approxQuantiles`' KLL sketches + row count), surfaced as
-    * trailing output columns via a group-sized broadcast join after
-    * assembly. (Before r15 the extras rode the bounds pass; the fixed
-    * sortable-bits bucketing removed that pass, so they get their own
-    * group aggregate — same stage count for the caller either way.) */
-  def exactPercentilesWith(df: org.apache.spark.sql.DataFrame, group: String,
-      specs: Seq[(String, Double, String)],
-      extraAggs: Seq[(Column, String)]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vcols = specs.map(_._1).distinct
-    val base = df.select((col(group) +: vcols.map(col)): _*)
-    // exploded (column-name, value) pairs with the FIXED monotone bucket
-    // id — identical deterministic expression in the census and
-    // refinement passes, no data-dependent state
-    val pairs = base.select(col(group), explode(array(vcols.map(v =>
-        struct(lit(v).as("vn"), col(v).cast(DoubleType).as("vv"))): _*)).as("__p"))
-      .select(col(group), col("__p.vn").as("__vn"), col("__p.vv").as("__vv"))
-      .withColumn("__bkt",
-        shiftright(call_function("graft_sortable_bits", col("__vv")), PctBktShift))
-    // (2) census + (3) exclusive prefix AND total count over the bucket
-    // domain — both windows share the (group, vn) exchange. The needed
-    // ranks `floor/ceil(p·(n−1))+1` are derived from the census total n
-    // (identical to mm's non-null count under the callers' non-null
-    // contract) and located in the SAME pass: each census row explodes
-    // its column's (out, lo|hi, rank, pos) spec entries and keeps those
-    // whose rank falls inside the row's bucket. This removes the whole
-    // second mm subtree and the separate targets⋈cum join the previous
-    // formulation paid — the census exchange IS the target locator.
-    val census = pairs.groupBy(col(group), col("__vn"), col("__bkt"))
-      .agg(count(lit(1)).as("__c"))
-    val wc = Window.partitionBy(col(group), col("__vn")).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wn = Window.partitionBy(col(group), col("__vn"))
-    val cum = census
-      .withColumn("__below", coalesce(sum(col("__c")).over(wc), lit(0L)))
-      .withColumn("__n", sum(col("__c")).over(wn))
-    val specArr: Column = vcols.map { v =>
-      val ss = specs.filter(_._1 == v).flatMap { case (_, p, out) =>
-        val pos = lit(p) * (col("__n") - 1).cast(DoubleType)
-        Seq(
-          struct(lit(out).as("out"), lit("lo").as("which"),
-            (floor(pos) + 1).as("rank"), pos.as("pos")),
-          struct(lit(out).as("out"), lit("hi").as("which"),
-            (ceil(pos) + 1).as("rank"), pos.as("pos")))
-      }
-      (v, array(ss: _*))
-    }.map { case (v, arr) => when(col("__vn") === v, arr) }
-      .reduce(_.otherwise(_))
-    val tloc = cum.withColumn("__t", explode(specArr))
-      .filter(col("__t.rank") > col("__below") &&
-        col("__t.rank") <= col("__below") + col("__c"))
-      .select(col(group), col("__vn"), col("__t.out").as("__out"),
-        col("__t.which").as("__which"), col("__t.rank").as("__rank"),
-        col("__t.pos").as("__pos"), col("__bkt"), col("__below"))
-    // (4) refinement: ONE broadcast inner join against the locator keeps
-    // only target buckets' rows (a row is duplicated only when several
-    // targets share its bucket), ranked in-bucket PER TARGET — the
-    // (out, which) keys in the window partition make each target's copy
-    // rank independently, which is exactly what the old semi-join +
-    // second locator join computed with one more broadcast job (the
-    // locator's census chain was evaluated twice).
-    val wl = Window.partitionBy(col(group), col("__vn"), col("__bkt"),
-        col("__out"), col("__which"))
-      .orderBy(col("__vv"))
-    val vals = pairs
-      .join(broadcast(tloc), Seq(group, "__vn", "__bkt"))
-      .withColumn("__lrn", row_number().over(wl))
-      .filter(col("__below") + col("__lrn") === col("__rank"))
-    // final assembly in ONE group-keyed aggregate (conditional min/max per
-    // output instead of a (group, out) rollup THEN a pivot — one exchange
-    // fewer) with the interpolation expression applied in the projection
-    val aggCols = specs.flatMap { case (_, _, out) =>
-      Seq(
-        min(when(col("__out") === out && col("__which") === "lo",
-          col("__vv"))).as(s"__vlo_$out"),
-        min(when(col("__out") === out && col("__which") === "hi",
-          col("__vv"))).as(s"__vhi_$out"),
-        max(when(col("__out") === out, col("__pos"))).as(s"__pos_$out"))
-    }
-    val agged = vals.groupBy(col(group)).agg(aggCols.head, aggCols.tail: _*)
-    val outs = specs.map { case (_, _, out) =>
-      val pos = col(s"__pos_$out")
-      val lo = floor(pos)
-      val hi = ceil(pos)
-      when(lo === hi, col(s"__vlo_$out")).otherwise(
-        (hi.cast(DoubleType) - pos) * col(s"__vlo_$out") +
-          (pos - lo.cast(DoubleType)) * col(s"__vhi_$out"))
-        .as(out)
-    }
-    val assembled = agged.select((col(group) +: outs): _*)
-    if (extraAggs.isEmpty) assembled
-    else {
-      // sibling group aggregate over the unprojected input (extras may
-      // reference columns outside vcols; Catalyst prunes the scan)
-      val extAggs = extraAggs.map { case (c, n) => c.as(n) }
-      val ext = df.groupBy(col(group)).agg(extAggs.head, extAggs.tail: _*)
-      assembled.join(broadcast(ext), group)
-    }
-  }
-
   /** Spark `percentile`'s interpolation, bit-identical:
     * `(ceil−pos)·v_lo + (pos−floor)·v_hi` (the exact-hit branch returns
-    * v_lo untouched). Shared by [[exactPercentilesWith]] and
-    * [[gridBucketPercentiles]] so every arm assembles the same double. */
+    * v_lo untouched). Shared by both chain kinds of
+    * [[gridBucketPercentilesWith]] so every output assembles the same
+    * double. */
   private def pctInterp(out: String): Column = {
     val pos = col(s"__pos_$out"); val lo = floor(pos); val hi = ceil(pos)
     when(lo === hi, col(s"__vlo_$out")).otherwise(
@@ -239,27 +94,43 @@ package object ops {
       .as(out)
   }
 
-  /** Exact interpolated percentiles, the NARROW-CHAIN shape (r19 VERDICT
-    * task 2a): value-identical to [[exactPercentiles]] but restructured
-    * around the measured cost model of the r19 pair — at bench SFs every
-    * subtree execution costs ~0.1 s of scheduling/scan overhead
-    * regardless of row count (a 60 M-row `range` sum and a 600 k-row
-    * parquet scan both clock ~0.11 s warm), so the win is FEWER SUBTREE
-    * EXECUTIONS, not fewer rows:
+  /** EXACT interpolated percentiles as distributed rank selection,
+    * instead of Spark's `percentile()` aggregate, whose buffer is the
+    * full per-group value list: boxed, serialized across the exchange in
+    * partial mode, and group-cardinality-parallel (3 tasks here) after a
+    * pre-repartition — measured 1.8–2.4 s per query at sf0.1 for 3-row
+    * outputs. Every value column gets its own NARROW column-pruned chain
+    * (r19 VERDICT task 2a), shaped by the measured cost model of the r19
+    * pair — at bench SFs every subtree execution costs ~0.1 s of
+    * scheduling/scan overhead regardless of row count (a 60 M-row
+    * `range` sum and a 600 k-row parquet scan both clock ~0.11 s warm),
+    * so the win is FEWER SUBTREE EXECUTIONS, not fewer rows:
     *
-    *   - NO generator: the unified (vn, value)-exploded census paid 2×
-    *     struct-explode passes; here each value column gets its own
-    *     narrow column-pruned chain (A/B'd 0.95 → 0.66 s in-shell).
-    *   - `gridCols` (small-domain grids — l_quantity is a 50-value
-    *     integer grid at every SF) census at FULL value granularity:
-    *     the census row IS the boundary value, so the refinement pass
-    *     disappears for them entirely (the kcore histogram-median
-    *     shape, Graph.scala:520).
-    *   - continuous columns keep the two-pass bucket-census +
-    *     refinement selection ([[exactPercentilesWith]]'s mechanism —
-    *     l_extendedprice measures 594 k distinct of 600 k rows at
-    *     sf0.1, so a full-value census would be data-sized and its
-    *     single-partition census sort a 100 TB scale defect).
+    *   - NO generator: the r15 unified (vn, value)-exploded census paid
+    *     2× struct-explode passes; per-column chains A/B'd 0.95 → 0.66 s
+    *     in-shell.
+    *   - `gridSpecs` columns (small-domain grids — l_quantity is a
+    *     50-value integer grid at every SF) census at FULL value
+    *     granularity: the census row IS the boundary value, so the
+    *     refinement pass disappears for them entirely (the kcore
+    *     histogram-median shape).
+    *   - `contSpecs` columns keep two-pass selection (l_extendedprice
+    *     measures 594 k distinct of 600 k rows at sf0.1, so a full-value
+    *     census would be data-sized and its single-partition census sort
+    *     a 100 TB scale defect): (1) every value maps to a FIXED
+    *     value-monotone bucket ([[graft.functions.SortableDoubleBits]] >>
+    *     [[PctBktShift]] — monotone by construction, so no min/max bounds
+    *     pass exists at all) and one map-side-combined count aggregate
+    *     builds the bucket census; (2) the cumulative census
+    *     (bucket-domain window) locates the bucket holding each needed
+    *     rank `floor/ceil(p·(n−1))+1`; (3) refinement re-scans the column
+    *     and inner-joins the BROADCAST target locator on (group, bucket)
+    *     — only target buckets' rows survive, ranked inside the bucket
+    *     per target (global rank = census prefix + local rank — buckets
+    *     are value-monotone, so this IS the global order).
+    *   - every output assembles `percentile`'s interpolation expression
+    *     bit-identically ([[pctInterp]]), so oracle behavior matches the
+    *     aggregate exactly.
     *   - assembly is JOIN-FREE: per-chain 3-row results union and
     *     re-aggregate on the group key (max over null-padded columns)
     *     instead of broadcast-joining — a broadcast assembly re-executes
@@ -270,7 +141,12 @@ package object ops {
     * At 100 TB: per-column passes are column-pruned scans with map-side
     * combined censuses (≤ groups·cells rows each), the locator broadcast
     * is target-sized, and nothing sorts more than a census partition.
-    * Callers must have registered [[graft.functions.GraftFunctions]]. */
+    *
+    * Specs are (valueColumn, p, outputName); value columns MUST be
+    * non-null (callers filter first — `percentile` ignores nulls, the
+    * shared counts here must too). One row per group, unrounded
+    * doubles. Callers must have registered
+    * [[graft.functions.GraftFunctions]] (every inventory query does). */
   def gridBucketPercentiles(df: org.apache.spark.sql.DataFrame, group: String,
       gridSpecs: Seq[(String, Double, String)],
       contSpecs: Seq[(String, Double, String)]): org.apache.spark.sql.DataFrame =
@@ -278,11 +154,11 @@ package object ops {
 
   /** [[gridBucketPercentiles]] plus extra per-group aggregates (sketches,
     * counts) computed in a sibling map-side-combined chain over the same
-    * input. Unlike [[exactPercentilesWith]]'s broadcast-join assembly,
-    * the extras ride the SAME join-free union fold as the percentile
-    * chains (null-padded columns, max per group): no broadcast-exchange
-    * job, no re-execution of either side as a build pass — the r21
-    * motivation for moving agg_approx_quantiles here (3 → 2 jobs). Extra
+    * input. The extras ride the SAME join-free union fold as the
+    * percentile chains (null-padded columns, max per group) rather than
+    * a broadcast-join assembly: no broadcast-exchange job, no
+    * re-execution of either side as a build pass — the r21 motivation
+    * for moving agg_approx_quantiles here (3 → 2 jobs). Extra
     * columns may be any orderable type (arrays included); exactly one
     * non-null row per group survives the fold. */
   def gridBucketPercentilesWith(df: org.apache.spark.sql.DataFrame,
@@ -292,6 +168,12 @@ package object ops {
       extraAggs: Seq[(Column, String)]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val allOuts = (gridSpecs ++ contSpecs).map(_._3)
+    val extNames = extraAggs.map(_._2)
+    // the union fold keys every column by name: an extra named like the
+    // group or a percentile output would silently merge into it
+    require(!extNames.contains(group) && extNames.forall(!allOuts.contains(_)),
+      s"extra aggregate names ${extNames.mkString(", ")} must differ from " +
+        s"the group column $group and the percentile outputs ${allOuts.mkString(", ")}")
     val wBelow = Window.partitionBy(col(group), col("__vn")).orderBy(col("__k"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(col(group), col("__vn"))
@@ -375,7 +257,6 @@ package object ops {
         val extAggCols = extraAggs.map { case (c, n) => c.as(n) }
         Seq(df.groupBy(col(group)).agg(extAggCols.head, extAggCols.tail: _*))
       }
-    val extNames = extraAggs.map(_._2)
     val extTypes: Map[String, org.apache.spark.sql.types.DataType] =
       extChains.headOption
         .map(_.schema.fields.map(f => f.name -> f.dataType).toMap)

@@ -47,14 +47,4 @@ class AnnRecallEvalSpec extends AnyFunSuite {
         s"ivf hits shrank probing ${lo._2}->${hi._2} cells")
     }
   }
-
-  test("fused and unfused PQ-family arms are value-identical (r18 adoption pin)") {
-    // the r18 A/B adopted the tagged one-dataflow PQ sweep; the unfused
-    // per-k arm stays re-measurable behind SPARK_GRAFT_PQ_FUSED=off and
-    // must never drift from the adopted default
-    val fused = Similarity.annRecallEvalImpl(spark, dir, 50L, fusedPq = true)
-    val unfused = Similarity.annRecallEvalImpl(spark, dir, 50L, fusedPq = false)
-    assert(fused.exceptAll(unfused).isEmpty && unfused.exceptAll(fused).isEmpty,
-      "PQ knob arms disagree")
-  }
 }

@@ -4,13 +4,14 @@ import graft.functions.{GraftFunctions, SortableDoubleBits}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r15 fixed-bucket rank-selection plan
-  * ([[graft.ops.exactPercentilesWith]]) to Spark's own `percentile`
-  * aggregate, and the sortable-bits transform to the double ordering it
-  * must preserve. The oracle (DuckDB quantile_cont) checks the inventory
-  * entries at spec SFs; this spec checks the HELPER on adversarial
-  * domains the TPC-H columns never hit — negatives, mixed signs,
-  * sub-normal spreads, single-value groups, groups of one row. */
+/** Pins the exact-percentile plan ([[graft.ops.gridBucketPercentiles]]:
+  * census-only grid chains and fixed-bucket refinement chains) to
+  * Spark's own `percentile` aggregate, and the sortable-bits transform
+  * to the double ordering it must preserve. The oracle (DuckDB
+  * quantile_cont) checks the inventory entries at spec SFs; this spec
+  * checks the HELPER on adversarial domains the TPC-H columns never
+  * hit — negatives, mixed signs, sub-normal spreads, single-value
+  * groups, groups of one row. */
 class PercentileRefinementPropSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -39,93 +40,79 @@ class PercentileRefinementPropSpec extends AnyFunSuite {
     }
   }
 
-  test("exactPercentiles equals Spark's percentile aggregate on adversarial groups") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    // groups with wildly different value regimes, incl. negatives and
-    // constant groups — bucket geometry must not matter
-    val rows = Seq.tabulate(4000) { i =>
-      val g = s"g${i % 7}"
-      val v = (i % 7) match {
-        case 0 => rnd.nextDouble() * 1e6 - 5e5        // mixed sign, wide
-        case 1 => -1000.0 - rnd.nextDouble()          // all negative
-        case 2 => 42.0                                // constant group
-        case 3 => rnd.nextDouble() * 1e-8             // tiny magnitudes
-        case 4 => rnd.nextInt(3).toDouble             // heavy ties
-        case 5 => math.pow(10, rnd.nextInt(12) - 6) * rnd.nextDouble() // many binades
-        case _ => rnd.nextGaussian()
-      }
-      (g, v)
-    } :+ (("solo", 17.5)) // single-row group
-    val df = rows.toDF("g", "v")
-    val ps = Seq(0.0, 0.01, 0.5, 0.9, 0.99, 1.0)
-    val got = graft.ops.exactPercentiles(df, "g",
-        ps.zipWithIndex.map { case (p, i) => ("v", p, s"p$i") })
+  /** `gridBucketPercentiles` over `df` must equal `percentile` per group
+    * for every (column, p, out) spec, value for value. */
+  private def assertMatchesPercentile(df: org.apache.spark.sql.DataFrame,
+      gridSpecs: Seq[(String, Double, String)],
+      contSpecs: Seq[(String, Double, String)]): Unit = {
+    val specs = gridSpecs ++ contSpecs
+    val got = graft.ops.gridBucketPercentiles(df, "g", gridSpecs, contSpecs)
       .orderBy(col("g")).collect()
-    val want = df.groupBy(col("g"))
-      .agg(ps.zipWithIndex.map { case (p, i) =>
-          expr(s"percentile(v, $p)").as(s"p$i") }.head,
-        ps.zipWithIndex.map { case (p, i) =>
-          expr(s"percentile(v, $p)").as(s"p$i") }.tail: _*)
+    val wantCols = specs.map { case (v, p, out) =>
+      expr(s"percentile($v, $p)").as(out) }
+    val want = df.groupBy(col("g")).agg(wantCols.head, wantCols.tail: _*)
       .orderBy(col("g")).collect()
     assert(got.length === want.length)
     got.zip(want).foreach { case (a, b) =>
       assert(a.getString(0) === b.getString(0))
-      (1 to ps.size).foreach { j =>
-        val (x, y) = (a.getDouble(j), b.getDouble(j))
-        assert(x === y,
-          s"group ${a.getString(0)} p=${ps(j - 1)}: got $x want $y")
+      specs.foreach { case (_, p, out) =>
+        val x = a.getDouble(a.fieldIndex(out))
+        val y = b.getDouble(b.fieldIndex(out))
+        assert(x === y, s"group ${a.getString(0)} $out (p=$p): got $x want $y")
       }
     }
   }
 
   test("gridBucketPercentiles equals Spark's percentile aggregate (both chain kinds)") {
-    // The r20 narrow-chain arm (graft.ops.gridBucketPercentiles) must be
-    // value-identical to the aggregate on BOTH paths: a grid column
+    // Both paths must be value-identical to the aggregate: a grid column
     // resolved census-only AND a continuous column through the bucket
-    // census + refinement chain — same adversarial regimes as above.
+    // census + refinement chain, on value regimes the TPC-H columns
+    // never hit.
     GraftFunctions.register(spark)
     import spark.implicits._
+    def regime(rnd: scala.util.Random, i: Int): Double = (i % 7) match {
+      case 0 => rnd.nextDouble() * 1e6 - 5e5        // mixed sign, wide
+      case 1 => -1000.0 - rnd.nextDouble()          // all negative
+      case 2 => 42.0                                // constant group
+      case 3 => rnd.nextDouble() * 1e-8             // tiny magnitudes
+      case 4 => rnd.nextInt(3).toDouble             // heavy ties
+      case 5 => math.pow(10, rnd.nextInt(12) - 6) * rnd.nextDouble() // many binades
+      case _ => rnd.nextGaussian()
+    }
     val rnd = new scala.util.Random(11)
     val rows = Seq.tabulate(4000) { i =>
-      val g = s"g${i % 7}"
-      val cont = (i % 7) match {
-        case 0 => rnd.nextDouble() * 1e6 - 5e5
-        case 1 => -1000.0 - rnd.nextDouble()
-        case 2 => 42.0
-        case 3 => rnd.nextDouble() * 1e-8
-        case 4 => rnd.nextInt(3).toDouble
-        case 5 => math.pow(10, rnd.nextInt(12) - 6) * rnd.nextDouble()
-        case _ => rnd.nextGaussian()
-      }
+      val cont = regime(rnd, i)
       // grid regime: small integer domain with heavy ties (the
       // l_quantity shape), including negatives
       val grid = (rnd.nextInt(50) - 10).toDouble
-      (g, grid, cont)
-    } :+ (("solo", 17.0, 17.5))
-    val df = rows.toDF("g", "gv", "cv")
-    val got = graft.ops.gridBucketPercentiles(df, "g",
-        gridSpecs = Seq(("gv", 0.5, "g50"), ("gv", 0.9, "g90")),
-        contSpecs = Seq(("cv", 0.5, "c50"), ("cv", 0.99, "c99")))
-      .orderBy(col("g")).collect()
-    val want = df.groupBy(col("g"))
-      .agg(expr("percentile(gv, 0.5)").as("g50"),
-        expr("percentile(gv, 0.9)").as("g90"),
-        expr("percentile(cv, 0.5)").as("c50"),
-        expr("percentile(cv, 0.99)").as("c99"))
-      .select(col("g"), col("g50"), col("g90"), col("c50"), col("c99"))
-      .orderBy(col("g")).collect()
-    assert(got.length === want.length)
-    got.zip(want).foreach { case (a, b) =>
-      assert(a.getString(0) === b.getString(0))
-      // result column order: allOuts = grid outs then cont outs
-      val names = Seq("g50", "g90", "c50", "c99")
-      names.zipWithIndex.foreach { case (n, k) =>
-        val x = a.getDouble(a.fieldIndex(n))
-        val y = b.getDouble(k + 1)
-        assert(x === y, s"group ${a.getString(0)} $n: got $x want $y")
-      }
-    }
+      (s"g${i % 7}", grid, cont)
+    } :+ (("solo", 17.0, 17.5)) // single-row group
+    assertMatchesPercentile(rows.toDF("g", "gv", "cv"),
+      gridSpecs = Seq(("gv", 0.5, "g50"), ("gv", 0.9, "g90")),
+      contSpecs = Seq(("cv", 0.5, "c50"), ("cv", 0.99, "c99")))
+    // the same adversarial groups from a second draw at the extreme and
+    // near-extreme ranks (p = 0, 0.01, 0.99, 1 hit the first/last
+    // bucket), through BOTH chain kinds — bucket geometry must not matter
+    val rnd2 = new scala.util.Random(42)
+    val rows2 = Seq.tabulate(4000)(i => (s"g${i % 7}", regime(rnd2, i))) :+
+      (("solo", 17.5))
+    val ps = Seq(0.0, 0.01, 0.5, 0.9, 0.99, 1.0).zipWithIndex
+    assertMatchesPercentile(rows2.toDF("g", "v"),
+      gridSpecs = ps.map { case (p, i) => ("v", p, s"gp$i") },
+      contSpecs = ps.map { case (p, i) => ("v", p, s"cp$i") })
+  }
+
+  test("gridBucketPercentilesWith rejects extra names that shadow its outputs") {
+    // the join-free union fold keys columns by name, so a colliding extra
+    // would silently merge into the group key or a percentile column
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0)).toDF("g", "v")
+    def run(extra: String) = graft.ops.gridBucketPercentilesWith(df, "g",
+      gridSpecs = Seq(("v", 0.5, "p50")), contSpecs = Nil,
+      extraAggs = Seq((count(lit(1)), extra)))
+    intercept[IllegalArgumentException](run("g"))
+    intercept[IllegalArgumentException](run("p50"))
+    assert(run("n").columns.toSeq === Seq("g", "p50", "n"))
   }
 }

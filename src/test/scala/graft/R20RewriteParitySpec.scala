@@ -34,10 +34,14 @@ class R20RewriteParitySpec extends AnyFunSuite {
   }
 
   test("link-prediction wedge arms agree (array expansion vs self-join)") {
+    // the pre-r20 wedge generator, verbatim: adj ⋈ adj on the shared
+    // endpoint, strict l.b < r.b half
     val adj = Graph.cappedAdjacency(spark, dir)
-    assertSame(
-      Graph.lpWedges(adj, useJoin = false),
-      Graph.lpWedges(adj, useJoin = true))
+    val selfJoin = adj.as("l").join(adj.as("r"), col("l.a") === col("r.a"))
+      .filter(col("l.b") < col("r.b"))
+      .groupBy(col("l.b").as("u"), col("r.b").as("v"))
+      .agg(count(lit(1)).as("common_neighbors"))
+    assertSame(Graph.lpWedges(adj), selfJoin)
   }
 
   test("golden-parity count-join diff equals exceptAll multiset counts") {

@@ -13,6 +13,10 @@
 #     collects are the #1 scale anti-pattern
 #  5. every oracle SQL ends with an ORDER BY (total output order is the
 #     cross-engine hash-compare contract)
+#  6. no sys.env read in ops/ outside ScaleChecks.scala (the scale tool's
+#     SLICE_MOD) and lines marked lint-ok — a query runs ONE plan; a
+#     settled A/B keeps its numbers in BENCH_NOTES, not an env-selected
+#     second code path
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -49,6 +53,12 @@ fi
 n_sim=$(grep -c '\.collect()' src/main/scala/graft/ops/Similarity.scala)
 if [ "$n_sim" -gt 5 ]; then
   say "FAIL: Similarity.scala grew a sixth .collect() (fenced budget is 5: two Lloyd trainers x (seed + per-round k*dim centroid rows) + the PQ codebook seed - all constant-size quantizer state)"; fail=1
+fi
+
+# 6. env-selected plan arms in the operator inventory
+if grep -rn 'sys\.env' src/main/scala/graft/ops --include='*.scala' \
+    | grep -v 'ScaleChecks\.scala' | grep -v 'lint-ok'; then
+  say "FAIL: sys.env read in ops/ (plan-level env arm)"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
