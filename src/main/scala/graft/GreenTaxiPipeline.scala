@@ -3,7 +3,7 @@ package graft
 import graft.features.Features
 import graft.ingest.Ingest
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end green-taxi pipeline — the user-facing equivalent of the
@@ -19,7 +19,8 @@ import scala.jdk.CollectionConverters._
   * (features), each extracted to a single file like the reference's
   * committed outputs (S15/S17: coalesce(1) + glob-move, 02.py:117-138).
   * `--fixed-dow` selects the corrected day-of-week encoding instead of the
-  * reference-bug-compatible one (SURVEY.md §2a S12).
+  * reference-bug-compatible one (SURVEY.md §2a S12). The CLI prints the
+  * ingest counters as one `metrics` line, for a rejected file too.
   */
 object GreenTaxiPipeline {
 
@@ -36,20 +37,40 @@ object GreenTaxiPipeline {
     Files.move(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def run(spark: SparkSession, csvPath: String, outDir: String,
-      bugCompatDow: Boolean = true): (Path, Path) = {
-    Files.createDirectories(Paths.get(outDir))
+  final case class Result(out01: Path, out02: Path, counts: Ingest.Counts)
 
-    val typed = Ingest.ingest(spark, csvPath)
-    Ingest.writeParquet(typed, s"$outDir/_01_dir", singleFile = true)
-    extractSingleFile(s"$outDir/_01_dir", s"$outDir/01.parquet")
-
-    val features = Features(spark.read.parquet(s"$outDir/01.parquet"), bugCompatDow)
-    features.coalesce(1).write.mode("overwrite").parquet(s"$outDir/_02_dir")
-    extractSingleFile(s"$outDir/_02_dir", s"$outDir/02.parquet")
-
-    (Paths.get(s"$outDir/01.parquet"), Paths.get(s"$outDir/02.parquet"))
+  /** coalesce(1) write of `df` to `<outDir>/<name>.parquet` through the
+    * staging dir `<outDir>/_<name>_dir`, which is deleted afterwards, on
+    * failure too. */
+  private def writeSingleFile(spark: SparkSession, df: DataFrame, outDir: String,
+      name: String): Path = {
+    val staging = s"$outDir/_${name}_dir"
+    val target = Paths.get(s"$outDir/$name.parquet")
+    try {
+      Ingest.writeParquet(df, staging, singleFile = true)
+      extractSingleFile(staging, target.toString)
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(staging)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    target
   }
+
+  /** Validates the whole CSV before any output exists, then writes `01`
+    * and `02` from the one materialized typed frame: three Spark jobs, one
+    * scan of the raw text. A malformed file throws the typed ingest error
+    * and leaves neither output. */
+  def run(spark: SparkSession, csvPath: String, outDir: String,
+      bugCompatDow: Boolean = true): Result =
+    Ingest.withIngested(spark, csvPath) { (typed, counts) =>
+      val out01 = writeSingleFile(spark, typed, outDir, "01")
+      val out02 = writeSingleFile(spark, Features(typed, bugCompatDow), outDir, "02")
+      Result(out01, out02, counts)
+    }
+
+  /** The ingest counters as one stdout line. */
+  private def metricsLine(rowsWritten: Long, c: Ingest.Counts): String =
+    s"metrics rows_written=$rowsWritten bad_rows=${c.badRows} bad_flags=${c.badFlags}"
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GreenTaxiPipeline <raw.csv> <outDir> [--fixed-dow]")
@@ -66,9 +87,15 @@ object GreenTaxiPipeline {
         if (csvPath.startsWith("http://") || csvPath.startsWith("https://"))
           Ingest.fetchToLocal(csvPath)
         else csvPath
-      val (p1, p2) = run(spark, src, outDir,
-        bugCompatDow = !args.contains("--fixed-dow"))
-      println(s"wrote $p1 and $p2")
+      val r =
+        try run(spark, src, outDir, bugCompatDow = !args.contains("--fixed-dow"))
+        catch {
+          case e: Ingest.InvalidDataException =>
+            println(metricsLine(0L, e.counts))
+            throw e
+        }
+      println(metricsLine(r.counts.rows, r.counts))
+      println(s"wrote ${r.out01} and ${r.out02}")
     } finally spark.stop()
   }
 }

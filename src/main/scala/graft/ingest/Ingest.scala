@@ -1,9 +1,10 @@
 package graft.ingest
 
 import graft.schema.GreenTaxi
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Strictly-validated CSV → typed DataFrame ingest with the semantics of the
   * reference's part 1 (/root/reference/01.py:168-240), re-expressed as a
@@ -16,8 +17,9 @@ import org.apache.spark.sql.types._
   *   S3 blank-line skip — `length(trim(value)) > 0` filter.
   *   S4 row normalization — rows with >20 fields keep the first 20
   *      (trailing-empty truncation, regex identical in spirit to
-  *      01.py:154-157); rows with <20 fields FAIL the job (strict mode),
-  *      mirroring InvalidDataError (01.py:164-165, 200-203).
+  *      01.py:154-157); rows with <20 fields fail the ingest with
+  *      InvalidDataException, mirroring InvalidDataError (01.py:164-165,
+  *      200-203).
   *   S5 typed parse — from_csv with an all-string schema, then per-column
   *      casts: Y/N → boolean (Arrow true_values/false_values,
   *      01.py:215-221 — Spark CSV has no such option, so it is expression
@@ -26,13 +28,23 @@ import org.apache.spark.sql.types._
   *      instants (01.py:71-86).
   *
   * Everything after the one-line header read is executor-side and scales
-  * with input splits; the strict-validation counts are computed in the same
-  * job graph (no extra pass over the raw text).
+  * with input splits. The strict checks are one job: the parse marks each
+  * short row and each bad Store_and_fwd_flag, and a `noop` write of the
+  * parsed frame sums the marks through a `Dataset.observe`, one task per
+  * text split. [[withIngested]] persists that frame first, so the same job
+  * also materializes the rows its caller writes and the raw text is read
+  * once; the typed errors are raised before the caller sees a row.
   */
 object Ingest {
 
   final class InvalidHeaderException(msg: String) extends RuntimeException(msg)
-  final class InvalidDataException(msg: String) extends RuntimeException(msg)
+  final class InvalidDataException(msg: String, val counts: Counts)
+    extends RuntimeException(msg)
+
+  /** The validation job's observed counters: data rows (blank lines and
+    * header rows excluded), short rows and invalid Store_and_fwd_flag
+    * tokens. */
+  final case class Counts(rows: Long, badRows: Long, badFlags: Long)
 
   /** First `NumColumns` comma-separated fields; empty match ⇒ malformed. */
   private[graft] val RowRegex = s"\\A((?:[^,]*,){${GreenTaxi.NumColumns - 1}}[^,\\r\\n]*)"
@@ -74,8 +86,8 @@ object Ingest {
 
   /** S1+S2–S6: ingest directly from an HTTP(S) URL (reference parity with
     * 01.py's default invocation). */
-  def ingestUrl(spark: SparkSession, url: String, strict: Boolean = true): DataFrame =
-    ingest(spark, fetchToLocal(url), strict)
+  def ingestUrl(spark: SparkSession, url: String): DataFrame =
+    ingest(spark, fetchToLocal(url))
 
   /** Scheme-dispatching entry point — the smart-open parity surface
     * (/root/reference/01.py:168-181 accepts http(s)/s3/gs/file paths
@@ -93,7 +105,7 @@ object Ingest {
     * (hadoop-aws / gcs-connector); without them Hadoop fails fast with
     * "No FileSystem for scheme" — an environment gap, not a code path
     * gap, and the error names the missing piece. */
-  def ingestAny(spark: SparkSession, uri: String, strict: Boolean = true): DataFrame = {
+  def ingestAny(spark: SparkSession, uri: String): DataFrame = {
     // The scheme is detected by RFC 3986 shape (case-insensitively), NOT
     // by java.net.URI parsing: an s3 key or URL path may contain
     // URI-illegal characters (spaces are legal in S3 object keys) and
@@ -102,10 +114,10 @@ object Ingest {
     val SchemeRe = "^([A-Za-z][A-Za-z0-9+.-]*):".r.unanchored
     val scheme = SchemeRe.findPrefixMatchOf(uri).map(_.group(1).toLowerCase)
     scheme match {
-      case Some("http") | Some("https") => ingestUrl(spark, uri, strict)
+      case Some("http") | Some("https") => ingestUrl(spark, uri)
       case Some("s3") =>
-        ingest(spark, "s3a:" + uri.substring(uri.indexOf(':') + 1), strict)
-      case _ => ingest(spark, uri, strict)
+        ingest(spark, "s3a:" + uri.substring(uri.indexOf(':') + 1))
+      case _ => ingest(spark, uri)
     }
   }
 
@@ -127,8 +139,8 @@ object Ingest {
         s"header mismatch: expected ${GreenTaxi.CsvHeader.mkString(",")} got $headerLine")
   }
 
-  /** Y/N → boolean; any other non-null value is invalid (checked in strict
-    * mode). '' was already nullified by from_csv's nullValue handling. */
+  /** Y/N → boolean; any other non-null value is invalid (marked by
+    * [[parsed]]). '' was already nullified by from_csv's nullValue handling. */
   private def ynBool(c: Column): Column =
     when(c === "Y", lit(true)).when(c === "N", lit(false)).otherwise(lit(null).cast(BooleanType))
 
@@ -142,80 +154,25 @@ object Ingest {
     case dt => c.cast(dt)
   }).as(name)
 
-  /** Full ingest: raw CSV path → typed DataFrame (S1–S6). */
-  def ingest(spark: SparkSession, path: String, strict: Boolean = true): DataFrame = {
-    validateHeader(readHeaderLine(spark, path))
+  private val ShortRow = "_short_row"
+  private val BadFlag = "_bad_flag"
+  private val TypedColumns = GreenTaxi.Columns.map(col)
 
-    val raw = spark.read.text(path)
-    val headerLit = GreenTaxi.CsvHeader.mkString(",")
-    val dataLines = raw
-      .filter(length(trim(col("value"))) > 0)       // S3 blank lines
-      .filter(col("value") =!= headerLit)           // drop header row
-    val normalized = dataLines
-      .select(regexp_extract(col("value"), RowRegex, 1).as("line"))
-
-    if (strict) {
-      // InvalidDataError analog: any non-blank row that did not yield
-      // exactly NumColumns fields aborts the job. One count over the same
-      // scan (Spark re-reads, but no driver buffering).
-      val bad = normalized.filter(col("line") === "").count()
-      if (bad > 0)
-        throw new InvalidDataException(s"$bad row(s) with fewer than ${GreenTaxi.NumColumns} fields")
-    }
-
-    val rawSchema = StructType(GreenTaxi.Columns.map(StructField(_, StringType, nullable = true)))
-    val parsed = normalized.select(
-      from_csv(col("line"), rawSchema,
-        Map("nullValue" -> "", "quote" -> "", "mode" -> "FAILFAST")).as("r"))
-
-    val typedCols = GreenTaxi.Columns.zip(GreenTaxi.ColumnTypes).map {
-      case (n, dt) => typed(n, dt, col(s"r.$n"))
-    }
-    val out = parsed.select(typedCols: _*)
-
-    if (strict) {
-      // Y/N-domain check (Arrow errors on unexpected boolean tokens).
-      val flagRaw = parsed.select(col("r.Store_and_fwd_flag").as("f"))
-      val badFlags = flagRaw.filter(col("f").isNotNull && col("f") =!= "Y" && col("f") =!= "N").count()
-      if (badFlags > 0)
-        throw new InvalidDataException(s"$badFlags invalid Store_and_fwd_flag value(s)")
-    }
-    out
-  }
-
-  /** S7: parquet sink (single file like the reference's golden output —
-    * coalesce(1) is ONLY for golden-parity; at scale, drop it). */
-  def writeParquet(df: DataFrame, outPath: String, singleFile: Boolean = false): Unit = {
-    val target = if (singleFile) df.coalesce(1) else df
-    target.write.mode("overwrite").parquet(outPath)
-  }
-
-  /** The 100 TB strict path: ingest + validate + write in ONE pass.
-    *
-    * `ingest(strict = true)` above runs two extra counting jobs, i.e. three
-    * scans of the raw text — fine at golden-file scale, wrong at 100 TB.
-    * Here the validation counters ride on `Dataset.observe` (accumulator
-    * metrics computed DURING the write job), so the raw text is read
-    * exactly once; if any malformed row or boolean token was seen, the
-    * just-written output is deleted and the job fails with the same
-    * exceptions as the multi-pass path.
-    */
-  def ingestAndWriteSinglePass(spark: SparkSession, path: String,
-      outPath: String): Unit = {
+  /** S2–S6 as one plan: the 20 typed columns plus the two strictness
+    * markers. from_csv runs PERMISSIVE: a short row leaves an empty line
+    * that FAILFAST would turn into an untyped SparkException mid-job; here
+    * it parses to nulls and is marked instead. */
+  private def parsed(spark: SparkSession, path: String): DataFrame = {
     validateHeader(readHeaderLine(spark, path))
 
     val headerLit = GreenTaxi.CsvHeader.mkString(",")
     val normalized = spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .filter(col("value") =!= headerLit)
+      .filter(length(trim(col("value"))) > 0)       // S3 blank lines
+      .filter(col("value") =!= headerLit)           // drop header row
       .select(regexp_extract(col("value"), RowRegex, 1).as("line"))
 
     val rawSchema = StructType(GreenTaxi.Columns.map(StructField(_, StringType, nullable = true)))
-    // PERMISSIVE here (not FAILFAST): a failed regex extract leaves an
-    // empty line that FAILFAST would explode on mid-job with a raw
-    // SparkException; the observe counters are the strictness gate and
-    // produce the same typed error AFTER the single pass completes.
-    val parsed = normalized.select(
+    val raw = normalized.select(
       col("line"),
       from_csv(col("line"), rawSchema,
         Map("nullValue" -> "", "quote" -> "", "mode" -> "PERMISSIVE")).as("r"))
@@ -224,27 +181,57 @@ object Ingest {
       case (n, dt) => typed(n, dt, col(s"r.$n"))
     }
     val flag = col("r.Store_and_fwd_flag")
-    val obs = new org.apache.spark.sql.Observation("ingest_validation")
-    val out = parsed
-      .observe(obs,
-        sum(when(col("line") === "", 1L).otherwise(0L)).as("bad_rows"),
-        sum(when(flag.isNotNull && flag =!= "Y" && flag =!= "N", 1L)
-          .otherwise(0L)).as("bad_flags"))
-      .select(typedCols: _*)
+    raw.select(typedCols :+
+      (col("line") === "").as(ShortRow) :+
+      (flag.isNotNull && flag =!= "Y" && flag =!= "N").as(BadFlag): _*)
+  }
 
-    out.write.mode("overwrite").parquet(outPath)
-
+  /** The strict check: one `noop` write of the markers, summed by an
+    * observation; throws the reference's InvalidDataError analog if any
+    * row was short or any flag not Y/N/empty. Over a persisted frame this
+    * one job also fills the cache. */
+  private def check(frame: DataFrame): Counts = {
+    val obs = new Observation("ingest_validation")
+    frame.select(ShortRow, BadFlag)
+      .observe(obs, count(lit(1)).as("rows"),
+        count_if(col(ShortRow)).as("bad_rows"), count_if(col(BadFlag)).as("bad_flags"))
+      .write.format("noop").mode("overwrite").save()
     val m = obs.get
-    val badRows = m("bad_rows").asInstanceOf[Long]
-    val badFlags = m("bad_flags").asInstanceOf[Long]
-    if (badRows > 0 || badFlags > 0) {
-      // poison output must not survive a failed validation
-      val p = new org.apache.hadoop.fs.Path(outPath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      if (badRows > 0)
-        throw new InvalidDataException(
-          s"$badRows row(s) with fewer than ${GreenTaxi.NumColumns} fields")
-      throw new InvalidDataException(s"$badFlags invalid Store_and_fwd_flag value(s)")
-    }
+    val c = Counts(m("rows").asInstanceOf[Long], m("bad_rows").asInstanceOf[Long],
+      m("bad_flags").asInstanceOf[Long])
+    if (c.badRows > 0)
+      throw new InvalidDataException(
+        s"${c.badRows} row(s) with fewer than ${GreenTaxi.NumColumns} fields", c)
+    if (c.badFlags > 0)
+      throw new InvalidDataException(s"${c.badFlags} invalid Store_and_fwd_flag value(s)", c)
+    c
+  }
+
+  /** Full ingest: raw CSV path → typed DataFrame (S1–S6), validated by one
+    * job; the returned frame is lazy and re-reads the text when used. */
+  def ingest(spark: SparkSession, path: String): DataFrame = {
+    val frame = parsed(spark, path)
+    check(frame)
+    frame.select(TypedColumns: _*)
+  }
+
+  /** Validate-then-use ingest: parses, validates and materializes the file
+    * in one parallel job, then lends `use` the typed frame and the
+    * validation counters. Nothing reaches `use` unless the whole file is
+    * valid, and every action `use` runs reads the materialized rows, not
+    * the raw text. The frame is unpersisted on return or throw. */
+  def withIngested[T](spark: SparkSession, path: String)(use: (DataFrame, Counts) => T): T = {
+    val frame = parsed(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val counts = check(frame)
+      use(frame.select(TypedColumns: _*), counts)
+    } finally frame.unpersist()
+  }
+
+  /** S7: parquet sink (single file like the reference's golden output —
+    * coalesce(1) is ONLY for golden-parity; at scale, drop it). */
+  def writeParquet(df: DataFrame, outPath: String, singleFile: Boolean = false): Unit = {
+    val target = if (singleFile) df.coalesce(1) else df
+    target.write.mode("overwrite").parquet(outPath)
   }
 }

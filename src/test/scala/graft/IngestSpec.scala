@@ -11,22 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * boolean, empty Ehail_fee/Trip_type, a binary-unrepresentable longitude,
   * and hard failures on bad header / short rows. */
 class IngestSpec extends AnyFunSuite {
+  import IngestSpec._
   private lazy val spark = TestSpark.spark
-
-  private val header = GreenTaxi.CsvHeader.mkString(",")
-  // 20 fields: vendor, pickup, dropoff, flag, rate, plon, plat, dlon, dlat,
-  // pcount, dist, fare, extra, mta, tip, tolls, ehail, total, ptype, ttype
-  private val rowA =
-    "2,2013-09-01 00:02:00,2013-09-01 00:54:51,N,1,-73.952407836914062,40.810726165771484,-73.924140930175781,40.743766784667969,1,7.06,28.50,0.50,0.50,0.00,0.00,,29.50,2,"
-  private val rowExtra = // 22 fields: two trailing empties must be dropped
-    "1,2013-09-01 12:00:00,2013-09-01 12:30:00,Y,1,-73.90,40.75,-73.91,40.76,2,3.10,12.00,0.00,0.50,2.00,0.00,,14.50,1,1,,"
-  private val rowShort = "2,2013-09-01 05:00:00,2013-09-01 05:10:00,N,1"
-
-  private def writeCsv(lines: Seq[String]): String = {
-    val f = Files.createTempFile("taxi", ".csv")
-    Files.writeString(f, lines.mkString("\n") + "\n")
-    f.toString
-  }
 
   test("parses a valid file with blank lines and trailing-field truncation") {
     val path = writeCsv(Seq(header, "", "   ", rowA, rowExtra))
@@ -72,24 +58,25 @@ class IngestSpec extends AnyFunSuite {
     assertThrows[Ingest.InvalidDataException] { Ingest.ingest(spark, path) }
   }
 
-  test("single-pass strict ingest writes valid files and matches the multi-pass path") {
-    val path = writeCsv(Seq(header, rowA, rowExtra))
-    val out = Files.createTempDirectory("taxi_sp").toString + "/out"
-    Ingest.ingestAndWriteSinglePass(spark, path, out)
-    val back = spark.read.parquet(out)
-    val multi = Ingest.ingest(spark, path)
-    assert(back.schema === GreenTaxi.Schema)
-    assert(back.exceptAll(multi).count() === 0L)
-    assert(multi.exceptAll(back).count() === 0L)
+  test("withIngested lends a frame equal to the lazy ingest frame") {
+    val path = writeCsv(Seq(header, "", rowA, rowExtra))
+    val lazyDf = Ingest.ingest(spark, path)
+    Ingest.withIngested(spark, path) { (df, counts) =>
+      assert(df.schema === GreenTaxi.Schema)
+      assert(counts === Ingest.Counts(rows = 2, badRows = 0, badFlags = 0))
+      assert(df.exceptAll(lazyDf).count() === 0L)
+      assert(lazyDf.exceptAll(df).count() === 0L)
+    }
   }
 
-  test("single-pass strict ingest fails on short rows and removes its output") {
+  test("withIngested rejects a short row before any output exists") {
     val path = writeCsv(Seq(header, rowA, rowShort))
-    val out = Files.createTempDirectory("taxi_sp_bad").toString + "/out"
-    assertThrows[Ingest.InvalidDataException] {
-      Ingest.ingestAndWriteSinglePass(spark, path, out)
+    val out = Files.createTempDirectory("taxi_loan_bad").toString + "/out"
+    val e = intercept[Ingest.InvalidDataException] {
+      Ingest.withIngested(spark, path) { (df, _) => Ingest.writeParquet(df, out) }
     }
-    assert(!new java.io.File(out).exists(), "poison output must be deleted")
+    assert(e.counts === Ingest.Counts(rows = 2, badRows = 1, badFlags = 0))
+    assert(!new java.io.File(out).exists(), "no output may be written for a rejected file")
   }
 
   test("round-trips through parquet with the exact declared schema") {
@@ -184,5 +171,23 @@ class IngestSpec extends AnyFunSuite {
       conf.unset("fs.s3a.impl")
       conf.unset("fs.s3a.impl.disable.cache")
     }
+  }
+}
+
+/** Hand-written CSV rows shared by the ingest and pipeline specs. */
+object IngestSpec {
+  val header = GreenTaxi.CsvHeader.mkString(",")
+  // 20 fields: vendor, pickup, dropoff, flag, rate, plon, plat, dlon, dlat,
+  // pcount, dist, fare, extra, mta, tip, tolls, ehail, total, ptype, ttype
+  val rowA =
+    "2,2013-09-01 00:02:00,2013-09-01 00:54:51,N,1,-73.952407836914062,40.810726165771484,-73.924140930175781,40.743766784667969,1,7.06,28.50,0.50,0.50,0.00,0.00,,29.50,2,"
+  val rowExtra = // 22 fields: two trailing empties must be dropped
+    "1,2013-09-01 12:00:00,2013-09-01 12:30:00,Y,1,-73.90,40.75,-73.91,40.76,2,3.10,12.00,0.00,0.50,2.00,0.00,,14.50,1,1,,"
+  val rowShort = "2,2013-09-01 05:00:00,2013-09-01 05:10:00,N,1"
+
+  def writeCsv(lines: Seq[String]): String = {
+    val f = Files.createTempFile("taxi", ".csv")
+    Files.writeString(f, lines.mkString("\n") + "\n")
+    f.toString
   }
 }

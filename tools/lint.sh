@@ -17,6 +17,8 @@
 #     SLICE_MOD) and lines marked lint-ok — a query runs ONE plan; a
 #     settled A/B keeps its numbers in BENCH_NOTES, not an env-selected
 #     second code path
+#  7. no .count() under ingest/ — the strict checks ride the one observed
+#     validation job; a count would be a second scan of the raw text
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -59,6 +61,11 @@ fi
 if grep -rn 'sys\.env' src/main/scala/graft/ops --include='*.scala' \
     | grep -v 'ScaleChecks\.scala' | grep -v 'lint-ok'; then
   say "FAIL: sys.env read in ops/ (plan-level env arm)"; fail=1
+fi
+
+# 7. extra validation scans in the ingest
+if grep -rn '\.count()' src/main/scala/graft/ingest --include='*.scala'; then
+  say "FAIL: .count() in ingest/ (strict checks ride the observed job)"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
