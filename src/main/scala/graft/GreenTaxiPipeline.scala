@@ -3,6 +3,8 @@ package graft
 import graft.features.Features
 import graft.ingest.Ingest
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -39,38 +41,85 @@ object GreenTaxiPipeline {
 
   final case class Result(out01: Path, out02: Path, counts: Ingest.Counts)
 
+  private def staging(outDir: String, name: String): String = s"$outDir/_${name}_dir"
+
+  private def deleteStaging(spark: SparkSession, outDir: String, name: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(staging(outDir, name))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
+
   /** coalesce(1) write of `df` to `<outDir>/<name>.parquet` through the
     * staging dir `<outDir>/_<name>_dir`, which is deleted afterwards, on
     * failure too. */
   private def writeSingleFile(spark: SparkSession, df: DataFrame, outDir: String,
       name: String): Path = {
-    val staging = s"$outDir/_${name}_dir"
     val target = Paths.get(s"$outDir/$name.parquet")
     try {
-      Ingest.writeParquet(df, staging, singleFile = true)
-      extractSingleFile(staging, target.toString)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(staging)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+      Ingest.writeParquet(df, staging(outDir, name), singleFile = true)
+      extractSingleFile(staging(outDir, name), target.toString)
+    } finally deleteStaging(spark, outDir, name)
     target
   }
 
+  /** Waits, at most 30 s, until no task of a job tagged `tag` runs: a
+    * cancelled job fails before its tasks have stopped, and a late task
+    * could still write into its staging dir. */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def running: Boolean = st.getJobIdsForTag(tag).iterator
+      .flatMap(st.getJobInfo(_)).flatMap(_.stageIds)
+      .flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
+  }
+
   /** Validates the whole CSV before any output exists, then writes `01`
-    * and `02` from the one materialized typed frame: three Spark jobs, one
-    * scan of the raw text. A malformed file throws the typed ingest error
-    * and leaves neither output. */
+    * and `02` from the one materialized typed frame at the same time: three
+    * Spark jobs, one scan of the raw text. `02`, the longer write, runs on
+    * the calling thread; `01` runs on a thread started here, which inherits
+    * the caller's Spark local properties (job group, description, tags), so
+    * a caller's `cancelJobGroup` reaches both. The frame is unpersisted
+    * after both writes have ended.
+    *
+    * A malformed file throws the typed ingest error and leaves neither
+    * output. If a write fails, the other is cancelled through this run's
+    * job tag; once both have ended, everything the run wrote (either
+    * target, both staging dirs) is deleted and the first error is rethrown,
+    * with the other's error, if any, suppressed in it. */
   def run(spark: SparkSession, csvPath: String, outDir: String,
-      bugCompatDow: Boolean = true): Result =
-    Ingest.withIngested(spark, csvPath) { (typed, counts) =>
-      val out01 = writeSingleFile(spark, typed, outDir, "01")
-      val out02 = writeSingleFile(spark, Features(typed, bugCompatDow), outDir, "02")
-      Result(out01, out02, counts)
-    }
+      bugCompatDow: Boolean = true): Result = {
+    val sc = spark.sparkContext
+    val tag = s"green-taxi-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try Ingest.withIngested(spark, csvPath) { (typed, counts) =>
+      val errors = new ConcurrentLinkedQueue[Throwable]
+      def fail(e: Throwable): Unit = { errors.add(e); sc.cancelJobsWithTag(tag) }
+      def sink(df: => DataFrame, name: String): Option[Path] =
+        try Some(writeSingleFile(spark, df, outDir, name))
+        catch { case e: Throwable => fail(e); None }
+      var out01: Option[Path] = None
+      val write01 = new Thread(() => out01 = sink(typed, "01"), "green-taxi-write01")
+      write01.start()
+      val out02 = sink(Features(typed, bugCompatDow), "02")
+      try write01.join()
+      catch { case e: InterruptedException => fail(e); write01.join() }
+      if (errors.isEmpty) Result(out01.get, out02.get, counts)
+      else {
+        awaitTasks(sc, tag)
+        (out01 ++ out02).foreach(Files.deleteIfExists)
+        Seq("01", "02").foreach(deleteStaging(spark, outDir, _))
+        val first = errors.poll()
+        errors.forEach(first.addSuppressed(_))
+        throw first
+      }
+    } finally sc.removeJobTag(tag)
+  }
 
   /** The ingest counters as one stdout line. */
   private def metricsLine(rowsWritten: Long, c: Ingest.Counts): String =
-    s"metrics rows_written=$rowsWritten bad_rows=${c.badRows} bad_flags=${c.badFlags}"
+    s"metrics rows_written=$rowsWritten bad_rows=${c.badRows} bad_flags=${c.badFlags} " +
+      s"blank_lines=${c.blankLines} header_rows=${c.headerRows}"
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GreenTaxiPipeline <raw.csv> <outDir> [--fixed-dow]")

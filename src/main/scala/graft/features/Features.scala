@@ -1,5 +1,7 @@
 package graft.features
 
+import graft.schema.GreenTaxi
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -53,17 +55,58 @@ object Features {
   def durationSeconds(pickup: Column, dropoff: Column): Column =
     (dropoff.cast(LongType) - pickup.cast(LongType)).as("Duration_seconds")
 
-  /** JFK pickup-or-dropoff flag (02.py:78-95). The decimal lon/lat columns
-    * are compared against double literals — Catalyst widens the decimals to
-    * double, the same TypeCoercion Spark 3.0 applied for the reference. */
-  def jfkFlag(pLon: Column, pLat: Column, dLon: Column, dLat: Column): Column =
+  /** One step of the coordinates' scale (15). */
+  private val Step = JBigDecimal.ONE.movePointLeft(15)
+
+  /** Smallest scale-15 decimal `t` with `x.doubleValue >= bound` ⇔ `x >= t`
+    * for every scale-15 `x`: the decimal → double rounding is monotone, so
+    * the set it maps to `>= bound` is an up-set, and `t` is its least
+    * element. Found by stepping from the bound's exact binary value. */
+  private def lowerThreshold(bound: Double): JBigDecimal = {
+    var t = new JBigDecimal(bound).setScale(15, RoundingMode.CEILING)
+    while (t.subtract(Step).doubleValue >= bound) t = t.subtract(Step)
+    while (t.doubleValue < bound) t = t.add(Step)
+    t
+  }
+
+  /** Largest scale-15 decimal `t` with `x.doubleValue <= bound` ⇔ `x <= t`. */
+  private def upperThreshold(bound: Double): JBigDecimal = {
+    var t = new JBigDecimal(bound).setScale(15, RoundingMode.FLOOR)
+    while (t.add(Step).doubleValue <= bound) t = t.add(Step)
+    while (t.doubleValue > bound) t = t.subtract(Step)
+    t
+  }
+
+  private val LonRange = (lowerThreshold(JfkLonMin), upperThreshold(JfkLonMax))
+  private val LatRange = (lowerThreshold(JfkLatMin), upperThreshold(JfkLatMax))
+
+  /** The four coordinates the JFK flag reads. */
+  private val Coordinates =
+    Seq("Pickup_longitude", "Pickup_latitude", "Dropoff_longitude", "Dropoff_latitude")
+
+  /** JFK pickup-or-dropoff flag (02.py:78-95). The reference compares the
+    * decimal(18,15)/(17,15) lon/lat columns against double literals, so
+    * Catalyst widens each decimal to double first (S14). That cast is a
+    * string parse per value (the unscaled values exceed 2^52, so
+    * `BigDecimal.doubleValue` goes through `Double.parseDouble`); instead
+    * each column is compared, as an exact decimal, against the scale-15
+    * threshold at which the double comparison flips. The flag is the same,
+    * bit for bit, for every scale-15 input and for nulls
+    * (`FeaturesSemanticsSpec` pins it against `cast(double) between` around
+    * every bound); the columns must have scale 15, which [[apply]] checks. */
+  def jfkFlag(pLon: Column, pLat: Column, dLon: Column, dLat: Column): Column = {
+    def in(c: Column, r: (JBigDecimal, JBigDecimal)): Column = c.between(lit(r._1), lit(r._2))
     oneHot(
-      (pLon.between(JfkLonMin, JfkLonMax) && pLat.between(JfkLatMin, JfkLatMax)) ||
-      (dLon.between(JfkLonMin, JfkLonMax) && dLat.between(JfkLatMin, JfkLatMax))
+      (in(pLon, LonRange) && in(pLat, LatRange)) || (in(dLon, LonRange) && in(dLat, LatRange))
     ).as("Pickup_or_dropoff_at_JFK")
+  }
 
   /** SELECT *, <33 derived columns> (02.py:22-30). */
   def apply(df: DataFrame, bugCompat: Boolean = true): DataFrame = {
+    for (c <- Coordinates) {
+      val (want, got) = (GreenTaxi.Schema(c).dataType, df.schema(c).dataType)
+      require(got == want, s"$c must be ${want.simpleString}, got ${got.simpleString}")
+    }
     val pickup = col("lpep_pickup_datetime")
     val derived =
       oneHotHours(pickup) ++

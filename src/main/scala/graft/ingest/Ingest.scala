@@ -1,7 +1,10 @@
 package graft.ingest
 
 import graft.schema.GreenTaxi
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -14,7 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *      (no whole-file buffering, unlike the reference's BytesIO at
   *      01.py:255-258 which holds the dataset in RAM twice and would not
   *      survive 100 TB).
-  *   S3 blank-line skip — `length(trim(value)) > 0` filter.
+  *   S3 blank-line skip — lines with `length(trim(value)) = 0` are
+  *      counted and dropped, as are repeated header rows.
   *   S4 row normalization — rows with >20 fields keep the first 20
   *      (trailing-empty truncation, regex identical in spirit to
   *      01.py:154-157); rows with <20 fields fail the ingest with
@@ -28,12 +32,15 @@ import org.apache.spark.storage.StorageLevel
   *      instants (01.py:71-86).
   *
   * Everything after the one-line header read is executor-side and scales
-  * with input splits. The strict checks are one job: the parse marks each
-  * short row and each bad Store_and_fwd_flag, and a `noop` write of the
-  * parsed frame sums the marks through a `Dataset.observe`, one task per
-  * text split. [[withIngested]] persists that frame first, so the same job
-  * also materializes the rows its caller writes and the raw text is read
-  * once; the typed errors are raised before the caller sees a row.
+  * with input splits: the text is cut into one split per core (file length
+  * / `defaultParallelism`, capped at the block size), so even a file of a
+  * few MB is parsed by every core. The strict checks are one job: the
+  * parse marks each short row, each bad Store_and_fwd_flag, each blank
+  * line and each header row, and a `noop` write of the parsed frame sums
+  * the marks through a `Dataset.observe`, one task per split.
+  * [[withIngested]] persists that frame first, so the same job also
+  * materializes the rows its caller writes and the raw text is read once;
+  * the typed errors are raised before the caller sees a row.
   */
 object Ingest {
 
@@ -42,9 +49,11 @@ object Ingest {
     extends RuntimeException(msg)
 
   /** The validation job's observed counters: data rows (blank lines and
-    * header rows excluded), short rows and invalid Store_and_fwd_flag
-    * tokens. */
-  final case class Counts(rows: Long, badRows: Long, badFlags: Long)
+    * header rows excluded), short rows, invalid Store_and_fwd_flag tokens,
+    * and the blank lines and header rows (the first line included) that
+    * the ingest skipped. */
+  final case class Counts(rows: Long, badRows: Long, badFlags: Long, blankLines: Long,
+      headerRows: Long)
 
   /** First `NumColumns` comma-separated fields; empty match ⇒ malformed. */
   private[graft] val RowRegex = s"\\A((?:[^,]*,){${GreenTaxi.NumColumns - 1}}[^,\\r\\n]*)"
@@ -156,24 +165,47 @@ object Ingest {
 
   private val ShortRow = "_short_row"
   private val BadFlag = "_bad_flag"
+  private val Blank = "_blank"
+  private val Header = "_header"
+  private val Skipped = col(Blank) || col(Header)
   private val TypedColumns = GreenTaxi.Columns.map(col)
 
-  /** S2–S6 as one plan: the 20 typed columns plus the two strictness
-    * markers. from_csv runs PERMISSIVE: a short row leaves an empty line
-    * that FAILFAST would turn into an untyped SparkException mid-job; here
-    * it parses to nulls and is marked instead. */
+  /** The raw lines of `path` (on any Hadoop FileSystem) as one `value`
+    * string column, one partition per input split, in file and offset
+    * order. Hadoop's `TextInputFormat`, asked for `defaultParallelism`
+    * splits, cuts a file into that many (each capped at the block size);
+    * `spark.read.text` cuts at `max(4 MB, bytes / cores)` and so leaves
+    * cores idle on a file of a few MB. The bytes are kept as read, invalid
+    * UTF-8 included, as `spark.read.text` keeps them. */
+  private def lines(spark: SparkSession, path: String): DataFrame = {
+    val sc = spark.sparkContext
+    val conf = new JobConf(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(conf, new Path(path))
+    val bytes = sc.hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable],
+      classOf[Text], sc.defaultParallelism).map(_._2.copyBytes())
+    spark.createDataset(bytes)(Encoders.BINARY).select(col("value").cast(StringType).as("value"))
+  }
+
+  /** S2–S6 as one plan: the 20 typed columns plus four markers (a short
+    * row, a bad flag, a blank line, a header row). Blank lines and header
+    * rows are marked, not filtered, so the validation job counts them;
+    * they parse to nulls and are dropped after it. from_csv runs
+    * PERMISSIVE: a short row leaves an empty line that FAILFAST would turn
+    * into an untyped SparkException mid-job; here it parses to nulls and
+    * is marked instead. */
   private def parsed(spark: SparkSession, path: String): DataFrame = {
     validateHeader(readHeaderLine(spark, path))
 
     val headerLit = GreenTaxi.CsvHeader.mkString(",")
-    val normalized = spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)       // S3 blank lines
-      .filter(col("value") =!= headerLit)           // drop header row
-      .select(regexp_extract(col("value"), RowRegex, 1).as("line"))
+    val value = col("value")
+    val blank = length(trim(value)) === 0
+    val header = value === headerLit
+    val normalized = lines(spark, path).select(blank.as(Blank), header.as(Header),
+      when(!(blank || header), regexp_extract(value, RowRegex, 1)).as("line"))
 
     val rawSchema = StructType(GreenTaxi.Columns.map(StructField(_, StringType, nullable = true)))
     val raw = normalized.select(
-      col("line"),
+      col(Blank), col(Header), col("line"),
       from_csv(col("line"), rawSchema,
         Map("nullValue" -> "", "quote" -> "", "mode" -> "PERMISSIVE")).as("r"))
 
@@ -181,10 +213,15 @@ object Ingest {
       case (n, dt) => typed(n, dt, col(s"r.$n"))
     }
     val flag = col("r.Store_and_fwd_flag")
-    raw.select(typedCols :+
-      (col("line") === "").as(ShortRow) :+
-      (flag.isNotNull && flag =!= "Y" && flag =!= "N").as(BadFlag): _*)
+    raw.select(typedCols ++ Seq(
+      (col("line") === "").as(ShortRow),
+      (flag.isNotNull && flag =!= "Y" && flag =!= "N").as(BadFlag),
+      col(Blank), col(Header)): _*)
   }
+
+  /** The data rows of a [[parsed]] frame, as the 20 typed columns. */
+  private def typedRows(frame: DataFrame): DataFrame =
+    frame.where(!Skipped).select(TypedColumns: _*)
 
   /** The strict check: one `noop` write of the markers, summed by an
     * observation; throws the reference's InvalidDataError analog if any
@@ -192,13 +229,14 @@ object Ingest {
     * one job also fills the cache. */
   private def check(frame: DataFrame): Counts = {
     val obs = new Observation("ingest_validation")
-    frame.select(ShortRow, BadFlag)
-      .observe(obs, count(lit(1)).as("rows"),
-        count_if(col(ShortRow)).as("bad_rows"), count_if(col(BadFlag)).as("bad_flags"))
+    frame.select(ShortRow, BadFlag, Blank, Header)
+      .observe(obs, count_if(!Skipped).as("rows"),
+        count_if(col(ShortRow)).as("bad_rows"), count_if(col(BadFlag)).as("bad_flags"),
+        count_if(col(Blank)).as("blank_lines"), count_if(col(Header)).as("header_rows"))
       .write.format("noop").mode("overwrite").save()
     val m = obs.get
-    val c = Counts(m("rows").asInstanceOf[Long], m("bad_rows").asInstanceOf[Long],
-      m("bad_flags").asInstanceOf[Long])
+    def n(name: String): Long = m(name).asInstanceOf[Long]
+    val c = Counts(n("rows"), n("bad_rows"), n("bad_flags"), n("blank_lines"), n("header_rows"))
     if (c.badRows > 0)
       throw new InvalidDataException(
         s"${c.badRows} row(s) with fewer than ${GreenTaxi.NumColumns} fields", c)
@@ -212,7 +250,7 @@ object Ingest {
   def ingest(spark: SparkSession, path: String): DataFrame = {
     val frame = parsed(spark, path)
     check(frame)
-    frame.select(TypedColumns: _*)
+    typedRows(frame)
   }
 
   /** Validate-then-use ingest: parses, validates and materializes the file
@@ -224,7 +262,7 @@ object Ingest {
     val frame = parsed(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val counts = check(frame)
-      use(frame.select(TypedColumns: _*), counts)
+      use(typedRows(frame), counts)
     } finally frame.unpersist()
   }
 

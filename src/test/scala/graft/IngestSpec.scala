@@ -63,7 +63,8 @@ class IngestSpec extends AnyFunSuite {
     val lazyDf = Ingest.ingest(spark, path)
     Ingest.withIngested(spark, path) { (df, counts) =>
       assert(df.schema === GreenTaxi.Schema)
-      assert(counts === Ingest.Counts(rows = 2, badRows = 0, badFlags = 0))
+      assert(counts === Ingest.Counts(rows = 2, badRows = 0, badFlags = 0, blankLines = 1,
+        headerRows = 1))
       assert(df.exceptAll(lazyDf).count() === 0L)
       assert(lazyDf.exceptAll(df).count() === 0L)
     }
@@ -75,7 +76,8 @@ class IngestSpec extends AnyFunSuite {
     val e = intercept[Ingest.InvalidDataException] {
       Ingest.withIngested(spark, path) { (df, _) => Ingest.writeParquet(df, out) }
     }
-    assert(e.counts === Ingest.Counts(rows = 2, badRows = 1, badFlags = 0))
+    assert(e.counts === Ingest.Counts(rows = 2, badRows = 1, badFlags = 0, blankLines = 0,
+      headerRows = 1))
     assert(!new java.io.File(out).exists(), "no output may be written for a rejected file")
   }
 
