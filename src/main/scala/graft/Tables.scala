@@ -1,14 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graft.FooterShim
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's testdata tables (see TESTDATA.md / FIXTURES.md §2).
   *
-  * One parquet file per table under `sfDir`. All loads are plain
-  * `spark.read.parquet` so Catalyst gets full pushdown/pruning freedom — no
-  * caching or eager materialization here; each query declares what it needs
-  * and the scan reads only that (verify with `.explain`: `ReadSchema` /
+  * One parquet file per table under `sfDir`. Every load is a plain parquet
+  * read whose schema comes from one in-process footer read ([[parquet]]),
+  * so Catalyst gets full pushdown/pruning freedom — no caching or eager
+  * materialization here; each query declares what it needs and the scan
+  * reads only that (verify with `.explain`: `ReadSchema` /
   * `PushedFilters`).
   *
   * Scale posture: at 100 TB these would be partitioned/bucketed table paths
@@ -18,9 +21,9 @@ import org.apache.spark.sql.functions._
 object Tables {
   /** Analyzed-DataFrame memo, keyed by (session, path). The testdata
     * tables are immutable files, so the resolved relation can be reused
-    * across the suite's 151 queries: `spark.read.parquet` eagerly lists
-    * the path and reads the footer schema on EVERY call — pure per-query
-    * floor when the same nine tables are read hundreds of times. A
+    * across the suite's 151 queries: each [[parquet]] call lists the path
+    * and reads a footer — pure per-query floor when the same nine tables
+    * are read hundreds of times. A
     * DataFrame is an immutable logical plan; sharing one shares no
     * execution state. Also makes concurrent query submission safe for
     * [[events]] AFTER FIRST TOUCH: once a path is memoized the
@@ -57,9 +60,24 @@ object Tables {
     // entries whose session has been stopped are dropped on lookup, so a
     // session-cycling host can't accumulate dead plans (+ file indexes).
     memo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memo.getOrElseUpdate((spark, s"$sfDir/$name.parquet"),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    val path = s"$sfDir/$name.parquet"
+    memo.getOrElseUpdate((spark, path), parquet(spark, path))
   }
+
+  /** A parquet file, or a flat directory of them, as the plain parquet
+    * read of `path` gives it (the same relation, file index, statistics
+    * and pushdown), with its schema resolved in-process: Spark's own
+    * inference reads the one footer it picks in a Spark job, one job per
+    * table before the first query; [[parquetSchema]] reads the same
+    * footer with no job. A partitioned directory is rejected; a missing
+    * path raises the read's `[PATH_NOT_FOUND]`. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The schema a plain parquet read of `path` infers, from the footer
+    * Spark's inference picks, read in-process (see [[parquet]]). */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    FooterShim.schema(spark, path)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -26,16 +26,30 @@ import org.apache.spark.sql.functions._
   * all map-side combined. */
 object GoldenParity {
   /** Reference checkout root — env-overridable (like SPARK_GRAFT_SF_DIR)
-    * so a host without /root/reference can still run the suite; the
-    * `dir` argument is deliberately unused (this query's input is the
-    * reference's fixed golden pair, so its cost is CONSTANT across SFs —
+    * so a host with the fixture elsewhere can run the suite; the census
+    * queries' `dir` argument is deliberately unused (their input is the
+    * reference's fixed golden pair, so their cost is CONSTANT across SFs —
     * per-SF bench totals include it as a fixed additive term). */
   private def refRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference")
 
+  /** The reference fixture `name` (`01.parquet` or `02.parquet`): the one
+    * place every fixture reader, specs included, finds it. */
+  def refPath(name: String): String = s"$refRoot/$name"
+
+  /** Reference fixture `name` through [[graft.Tables.parquet]]; a missing
+    * fixture raises one message that names the file and the variable. */
+  def reference(spark: SparkSession, name: String): DataFrame = {
+    val path = refPath(name)
+    if (!new java.io.File(path).exists())
+      throw new java.io.FileNotFoundException(s"reference fixture $path is missing; " +
+        "set SPARK_GRAFT_REF_DIR to the directory that holds 01.parquet and 02.parquet")
+    graft.Tables.parquet(spark, path)
+  }
+
   def census(spark: SparkSession, dir: String): DataFrame = {
-    val derived = Features(spark.read.parquet(s"$refRoot/01.parquet"))
-    val golden = spark.read.parquet(s"$refRoot/02.parquet")
+    val derived = Features(reference(spark, "01.parquet"))
+    val golden = reference(spark, "02.parquet")
     // The two-way multiset diff runs on 64-bit row FINGERPRINTS
     // (xxhash64 over every column, golden column order on both sides):
     // identical diff-count semantics — a row is unmatched iff its
@@ -138,8 +152,7 @@ object GoldenParity {
     * buggy sums are PyArrow-verified against the reference's committed
     * 02.parquet (FIXTURES.md §1c), and dow6 is forced by the row total. */
   def fixedDowCensus(spark: SparkSession, dir: String): DataFrame = {
-    val derived = Features(
-      spark.read.parquet(s"$refRoot/01.parquet"), bugCompat = false)
+    val derived = Features(reference(spark, "01.parquet"), bugCompat = false)
     val dowSums = (0 until 7).map(d =>
       sum(col(s"Pickup_dow_is_$d")).cast("long").as(s"dow$d"))
     val aggCols = dowSums ++ Seq(

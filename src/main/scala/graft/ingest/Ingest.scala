@@ -1,9 +1,11 @@
 package graft.ingest
 
 import graft.schema.GreenTaxi
+import java.io.FileNotFoundException
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
+import org.apache.hadoop.mapred.{FileInputFormat, InvalidInputException, JobConf, TextInputFormat}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,10 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * reference's part 1 (/root/reference/01.py:168-240), re-expressed as a
   * distributed Spark pipeline:
   *
-  *   S2 header validation — driver reads ONLY the first line via Hadoop FS
-  *      (no whole-file buffering, unlike the reference's BytesIO at
-  *      01.py:255-258 which holds the dataset in RAM twice and would not
-  *      survive 100 TB).
+  *   S2 header validation — reads ONLY the first line of each input
+  *      file, in-process via Hadoop FS (no whole-file buffering, unlike the
+  *      reference's BytesIO at 01.py:255-258 which holds the dataset in RAM
+  *      twice and would not survive 100 TB). The input may be a file, a
+  *      glob or a directory: the files are the ones the text reader lists.
   *   S3 blank-line skip — lines with `length(trim(value)) = 0` are
   *      counted and dropped, as are repeated header rows.
   *   S4 row normalization — rows with >20 fields keep the first 20
@@ -131,14 +134,32 @@ object Ingest {
   }
 
   /** S2: read just the first line of the file (driver-side, bounded I/O). */
-  def readHeaderLine(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
+  def readHeaderLine(spark: SparkSession, path: String): String =
+    firstLine(new Path(path), spark.sparkContext.hadoopConfiguration)
+
+  private def firstLine(p: Path, conf: Configuration): String = {
+    val in = p.getFileSystem(conf).open(p)
     try {
       val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
       Option(reader.readLine()).getOrElse("")
     } finally in.close()
+  }
+
+  /** Hadoop's text input format with its file listing exposed. */
+  private final class TextFiles extends TextInputFormat {
+    def list(conf: JobConf): Seq[Path] = listStatus(conf).toSeq.map(_.getPath)
+  }
+
+  /** The files the text reader reads for `conf`'s input `path`, listed by
+    * `TextInputFormat` itself: a glob expanded, a directory listed one
+    * level deep, names starting with `_` or `.` skipped. A path that
+    * matches no file raises a `FileNotFoundException`. */
+  private def inputFiles(conf: JobConf, path: String): Seq[Path] = {
+    val files =
+      try new TextFiles().list(conf)
+      catch { case _: InvalidInputException => Nil } // missing path, or a glob matching nothing
+    if (files.isEmpty) throw new FileNotFoundException(s"no input file matches $path")
+    files
   }
 
   def validateHeader(headerLine: String): Unit = {
@@ -170,17 +191,16 @@ object Ingest {
   private val Skipped = col(Blank) || col(Header)
   private val TypedColumns = GreenTaxi.Columns.map(col)
 
-  /** The raw lines of `path` (on any Hadoop FileSystem) as one `value`
-    * string column, one partition per input split, in file and offset
-    * order. Hadoop's `TextInputFormat`, asked for `defaultParallelism`
-    * splits, cuts a file into that many (each capped at the block size);
-    * `spark.read.text` cuts at `max(4 MB, bytes / cores)` and so leaves
-    * cores idle on a file of a few MB. The bytes are kept as read, invalid
-    * UTF-8 included, as `spark.read.text` keeps them. */
-  private def lines(spark: SparkSession, path: String): DataFrame = {
+  /** The raw lines of `conf`'s input files (on any Hadoop FileSystem) as
+    * one `value` string column, one partition per input split, in file
+    * and offset order. Hadoop's `TextInputFormat`, asked for
+    * `defaultParallelism` splits, cuts a file into that many (each capped
+    * at the block size); `spark.read.text` cuts at `max(4 MB, bytes /
+    * cores)` and so leaves cores idle on a file of a few MB. The bytes are
+    * kept as read, invalid UTF-8 included, as `spark.read.text` keeps
+    * them. */
+  private def lines(spark: SparkSession, conf: JobConf): DataFrame = {
     val sc = spark.sparkContext
-    val conf = new JobConf(sc.hadoopConfiguration)
-    FileInputFormat.setInputPaths(conf, new Path(path))
     val bytes = sc.hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable],
       classOf[Text], sc.defaultParallelism).map(_._2.copyBytes())
     spark.createDataset(bytes)(Encoders.BINARY).select(col("value").cast(StringType).as("value"))
@@ -194,13 +214,15 @@ object Ingest {
     * into an untyped SparkException mid-job; here it parses to nulls and
     * is marked instead. */
   private def parsed(spark: SparkSession, path: String): DataFrame = {
-    validateHeader(readHeaderLine(spark, path))
+    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
+    FileInputFormat.setInputPaths(conf, new Path(path))
+    inputFiles(conf, path).foreach(f => validateHeader(firstLine(f, conf)))
 
     val headerLit = GreenTaxi.CsvHeader.mkString(",")
     val value = col("value")
     val blank = length(trim(value)) === 0
     val header = value === headerLit
-    val normalized = lines(spark, path).select(blank.as(Blank), header.as(Header),
+    val normalized = lines(spark, conf).select(blank.as(Blank), header.as(Header),
       when(!(blank || header), regexp_extract(value, RowRegex, 1)).as("line"))
 
     val rawSchema = StructType(GreenTaxi.Columns.map(StructField(_, StringType, nullable = true)))

@@ -146,7 +146,7 @@ object StreamingOps {
     * events parquet files (the file source tails directories). */
   def streamingTumblingCounts(spark: SparkSession, eventsDir: String): DataFrame =
     Tables.withNanosAsLong(spark) {
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquetSchema(spark, eventsDir)
     // Watermarks require TIMESTAMP (instant) event time; with a UTC session
     // the wall-clock matches the NTZ batch twin, and the output window start
     // is cast back to NTZ for comparability.
@@ -198,7 +198,7 @@ object StreamingOps {
     * emitted pair set equals the batch theta join. Returned unstarted. */
   def streamingPriorEventsJoin(spark: SparkSession, eventsDir: String): DataFrame =
     Tables.withNanosAsLong(spark) {
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquetSchema(spark, eventsDir)
     def src() = normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))
@@ -229,7 +229,7 @@ object StreamingOps {
     * StreamingSpec asserts closed-bar agreement between the two. */
   def streamingOhlcBars(spark: SparkSession, eventsDir: String): DataFrame =
     Tables.withNanosAsLong(spark) {
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquetSchema(spark, eventsDir)
     normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))
@@ -253,7 +253,7 @@ object StreamingOps {
     * watermark advances — bounded memory on an unbounded stream. */
   def streamingDedup(spark: SparkSession, eventsDir: String): DataFrame =
     Tables.withNanosAsLong(spark) {
-    val schema = spark.read.parquet(eventsDir).schema
+    val schema = Tables.parquetSchema(spark, eventsDir)
     normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))

@@ -1,19 +1,19 @@
 package graft
 
-import graft.features.Features
+import graft.features.{Features, GoldenParity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-parity tests: apply Features to the reference's own ingest output
-  * (/root/reference/01.parquet) and require exact agreement with the
+  * (`GoldenParity.refPath("01.parquet")`) and require exact agreement with the
   * reference's committed 02.parquet — both anchor aggregates (FIXTURES.md
   * §1c) and a full two-way value-level diff. */
 class FeaturesGoldenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val derived =
-    Features(spark.read.parquet("/root/reference/01.parquet"))
-  private lazy val golden = spark.read.parquet("/root/reference/02.parquet")
+    Features(GoldenParity.reference(spark, "01.parquet"))
+  private lazy val golden = GoldenParity.reference(spark, "02.parquet")
 
   test("row count and schema match the golden output") {
     assert(derived.count() === 49647L)
@@ -39,7 +39,7 @@ class FeaturesGoldenSpec extends AnyFunSuite {
   }
 
   test("corrected dow variant encodes every row exactly once") {
-    val fixed = Features(spark.read.parquet("/root/reference/01.parquet"),
+    val fixed = Features(GoldenParity.reference(spark, "01.parquet"),
       bugCompat = false)
     val total = fixed.select(
       sum((0 until 7).map(d => col(s"Pickup_dow_is_$d")).reduce(_ + _)).cast("long"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.features.Features
+import graft.features.{Features, GoldenParity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FeaturesPropSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val derived =
-    Features(spark.read.parquet("/root/reference/01.parquet"))
+    Features(GoldenParity.reference(spark, "01.parquet"))
 
   test("exactly one hour flag per row, always") {
     val hourSum = (0 until 24).map(h => col(s"Pickup_hour_is_$h")).reduce(_ + _)
@@ -25,14 +25,14 @@ class FeaturesPropSpec extends AnyFunSuite {
   }
 
   test("fixed dow variant: exactly one flag per row") {
-    val fixed = Features(spark.read.parquet("/root/reference/01.parquet"),
+    val fixed = Features(GoldenParity.reference(spark, "01.parquet"),
       bugCompat = false)
     val dowSum = (0 until 7).map(d => col(s"Pickup_dow_is_$d")).reduce(_ + _)
     assert(fixed.filter(dowSum =!= 1).count() === 0L)
   }
 
   test("duration is antisymmetric in its arguments") {
-    val df = spark.read.parquet("/root/reference/01.parquet")
+    val df = GoldenParity.reference(spark, "01.parquet")
     val fwd = Features.durationSeconds(
       col("lpep_pickup_datetime"), col("lpep_dropoff_datetime"))
     val rev = Features.durationSeconds(

@@ -1,5 +1,6 @@
 package graft
 
+import graft.features.GoldenParity
 import graft.ingest.Ingest
 import graft.schema.GreenTaxi
 import java.nio.file.{Files, Paths}
@@ -20,7 +21,7 @@ class IngestGoldenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("reconstructed-CSV round-trip equals 01.parquet on all rows") {
-    val golden = spark.read.parquet("/root/reference/01.parquet")
+    val golden = GoldenParity.reference(spark, "01.parquet")
 
     val fieldToString = GreenTaxi.Columns.zip(GreenTaxi.ColumnTypes).map {
       case (n, BooleanType) =>

@@ -174,6 +174,46 @@ class IngestSpec extends AnyFunSuite {
       conf.unset("fs.s3a.impl.disable.cache")
     }
   }
+
+  /** A directory holding `parts` as CSV files, plus a `_SUCCESS` marker and
+    * a `.`-named CSV that is not one, both skipped by the text reader. */
+  private def csvDir(parts: Seq[String]*): String = {
+    val dir = Files.createTempDirectory("taxi_parts")
+    parts.zipWithIndex.foreach { case (lines, i) =>
+      Files.writeString(dir.resolve(f"part-$i%05d.csv"), lines.mkString("\n") + "\n")
+    }
+    Files.writeString(dir.resolve("_SUCCESS"), "")
+    Files.writeString(dir.resolve(".notes.csv"), "not csv")
+    dir.toString
+  }
+
+  test("a directory of CSV parts and a glob over them ingest like the single file") {
+    val single = Ingest.ingest(spark, writeCsv(Seq(header, rowA, rowExtra)))
+    val dir = csvDir(Seq(header, rowA), Seq(header, "", rowExtra))
+    for (path <- Seq(dir, s"$dir/*.csv")) {
+      val df = Ingest.ingest(spark, path)
+      assert(df.schema === GreenTaxi.Schema, path)
+      assert(df.count() === 2L, path)
+      assert(df.exceptAll(single).isEmpty && single.exceptAll(df).isEmpty, path)
+    }
+  }
+
+  test("a part with a bad header raises InvalidHeaderException and leaves no output") {
+    val dir = csvDir(Seq(header, rowA), Seq("foo,bar", rowExtra))
+    for (path <- Seq(dir, s"$dir/*.csv")) {
+      val out = Files.createTempDirectory("taxi_parts_bad").toString + "/out"
+      intercept[Ingest.InvalidHeaderException] {
+        Ingest.withIngested(spark, path) { (df, _) => Ingest.writeParquet(df, out) }
+      }
+      assert(!new java.io.File(out).exists(), s"$path: no output may be written")
+    }
+  }
+
+  test("a path that matches no input file raises FileNotFoundException") {
+    val dir = csvDir()
+    for (path <- Seq(dir, s"$dir/*.csv", s"$dir/absent.csv"))
+      intercept[java.io.FileNotFoundException](Ingest.ingest(spark, path))
+  }
 }
 
 /** Hand-written CSV rows shared by the ingest and pipeline specs. */

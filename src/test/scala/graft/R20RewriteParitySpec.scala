@@ -48,9 +48,7 @@ class R20RewriteParitySpec extends AnyFunSuite {
     // multiset-difference identity |A∖B| = Σ_h max(0, cntA−cntB) on the
     // REAL fingerprint frames, both directions, including an injected
     // asymmetry so the zero-diff fixture cannot make the test vacuous
-    val golden = spark.read.parquet(
-      sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference") +
-        "/02.parquet")
+    val golden = graft.features.GoldenParity.reference(spark, "02.parquet")
     val gcols = golden.columns.toSeq
     val fpAll = golden.select(xxhash64(gcols.map(col): _*).as("h"))
     // asymmetric sides: drop a distinct-valued slice from one, duplicate

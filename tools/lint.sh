@@ -19,6 +19,10 @@
 #     second code path
 #  7. no .count() under ingest/ — the strict checks ride the one observed
 #     validation job; a count would be a second scan of the raw text
+#  8. no .read.parquet( in Tables.scala, SparkEntry.scala, features/ or
+#     streaming/ — those inputs resolve through Tables.parquet, whose schema
+#     comes from an in-process footer read instead of Spark's one-job
+#     schema inference
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -66,6 +70,13 @@ fi
 # 7. extra validation scans in the ingest
 if grep -rn '\.count()' src/main/scala/graft/ingest --include='*.scala'; then
   say "FAIL: .count() in ingest/ (strict checks ride the observed job)"; fail=1
+fi
+
+# 8. schema-inference jobs on the table and fixture inputs
+if grep -rnF '.read.parquet(' src/main/scala/graft/Tables.scala \
+    src/main/scala/graft/SparkEntry.scala src/main/scala/graft/features \
+    src/main/scala/graft/streaming --include='*.scala'; then
+  say "FAIL: .read.parquet( on a Tables.parquet input (schema-inference job)"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
