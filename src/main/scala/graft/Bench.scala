@@ -238,9 +238,7 @@ object Bench {
         if (new java.io.File(warmDir0).exists()) relayout(spark, warmDir0)
         else warmDir0
       if (new java.io.File(warmDir0).exists()) {
-        // Sequential pre-touch: events()'s first resolution toggles a
-        // session conf; racing that from the warm-up's K streams can
-        // swallow a PARQUET_TYPE_ILLEGAL and leave queries unwarmed.
+        // every table resolved at once before the warm-up's K streams
         Tables.preTouch(spark, warmDir)
         concurrentPass(spark, warmDir, streams, warm = true)
         // Post-warm-up quiesce (env-gated A/B knob): the 8-stream warm-up

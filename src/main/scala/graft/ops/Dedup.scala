@@ -471,10 +471,12 @@ object Dedup {
     * formulation's only remaining exchange was re-shuffling the exploded
     * corpus to regroup it by doc; this computes the identical signatures
     * (when the df cap does not bind — see MinHashSigsRow) inside the
-    * projection and moves nothing. The leading repartition subtree is
-    * BYTE-IDENTICAL to `hashedShingles`' — one exchange feeds both the
-    * shingle cache build and this projection via ReusedExchange, so the
-    * sig path costs zero extra scans or shuffles. */
+    * projection and moves nothing. The leading repartition matches
+    * `hashedShingles`', but the two are NOT shared: in the executed
+    * `dedup_minhash_lsh` plan each sits under its own `InMemoryRelation`
+    * (`sh` and `cand`) with its own `Exchange hashpartitioning(doc_id, n),
+    * REPARTITION_BY_NUM`, so `documents` is scanned, tokenized and
+    * shuffled twice. */
   private[graft] def rowSigs(docs: DataFrame): DataFrame =
     docs.repartition(
       docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))

@@ -130,16 +130,15 @@ object Joins {
       |  ON c_acctbal >= lo AND c_acctbal < hi
       |GROUP BY bucket_id ORDER BY bucket_id""".stripMargin
 
-  /** Three-way fact join lineitem ⋈ orders ⋈ customer (TPC-H Q3 shape):
-    * two shuffle joins on different keys — the canonical re-partitioning
-    * pipeline a 100 TB engine must get right (AQE coalesces the post-join
-    * partitions). */
-  /** Bucketed co-located join: both sides saved `bucketBy(8, key)` +
-    * `sortBy(key)` — the storage layout a maintained 100 TB fact table
-    * would have — so the sort-merge join consumes bucket files DIRECTLY:
+  /** Bucketed co-located join: both sides saved `bucketBy(8, key)` — the
+    * storage layout a maintained 100 TB fact table would have — so the
+    * sort-merge join reads each side already hash-partitioned by the key:
     * zero exchange on either side, and grouping on the bucket key stays
     * exchange-free too (`BucketedJoinSpec` + the hash-exchange-free
-    * assertion in PlanSpec pin it). This is the layout decision that
+    * assertion in PlanSpec pin it). Spark 4.1's bucketed scan reports no
+    * output ordering, so the plan sorts each side itself (`Sort ...,
+    * false, 0` over both scans) and a `sortBy` at write time would buy
+    * nothing. This is the layout decision that
     * turns every repeated fact⋈fact shuffle into a scan-side property;
     * the write cost is paid once per table, not once per query. The MERGE
     * hint pins the sort-merge path so the demo is bucketing, not a
@@ -170,11 +169,11 @@ object Joins {
       spark.sql(s"DROP TABLE IF EXISTS graft_orders_bkt_$suf")
       spark.sql(s"DROP TABLE IF EXISTS graft_lineitem_bkt_$suf")
       Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderstatus"))
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .write.bucketBy(8, "o_orderkey")
         .option("path", s"$root/orders").mode("overwrite")
         .saveAsTable(s"graft_orders_bkt_$suf")
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity"))
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .write.bucketBy(8, "l_orderkey")
         .option("path", s"$root/lineitem").mode("overwrite")
         .saveAsTable(s"graft_lineitem_bkt_$suf")
       (spark.table(s"graft_orders_bkt_$suf"),
@@ -199,6 +198,10 @@ object Joins {
       |WHERE o_orderkey % 100 = 0
       |GROUP BY 1 ORDER BY o_orderkey""".stripMargin
 
+  /** Three-way fact join lineitem ⋈ orders ⋈ customer (TPC-H Q3 shape):
+    * two shuffle joins on different keys — the canonical re-partitioning
+    * pipeline a 100 TB engine must get right (AQE coalesces the post-join
+    * partitions). */
   def threeWay(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)

@@ -144,9 +144,8 @@ object StreamingOps {
     * tumbling 1-day window per event_type. Returned unstarted; callers
     * attach a sink (`writeStream`). `eventsDir` must be a DIRECTORY of
     * events parquet files (the file source tails directories). */
-  def streamingTumblingCounts(spark: SparkSession, eventsDir: String): DataFrame =
-    Tables.withNanosAsLong(spark) {
-    val schema = Tables.parquetSchema(spark, eventsDir)
+  def streamingTumblingCounts(spark: SparkSession, eventsDir: String): DataFrame = {
+    val schema = Tables.parquetSchema(spark, eventsDir, nanosAsLong = true)
     // Watermarks require TIMESTAMP (instant) event time; with a UTC session
     // the wall-clock matches the NTZ batch twin, and the output window start
     // is cast back to NTZ for comparability.
@@ -196,9 +195,8 @@ object StreamingOps {
     * predicate). This is the streaming twin of the batch
     * `join_interval_binned` semantics; `StreamingSpec` proves the
     * emitted pair set equals the batch theta join. Returned unstarted. */
-  def streamingPriorEventsJoin(spark: SparkSession, eventsDir: String): DataFrame =
-    Tables.withNanosAsLong(spark) {
-    val schema = Tables.parquetSchema(spark, eventsDir)
+  def streamingPriorEventsJoin(spark: SparkSession, eventsDir: String): DataFrame = {
+    val schema = Tables.parquetSchema(spark, eventsDir, nanosAsLong = true)
     def src() = normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))
@@ -227,9 +225,8 @@ object StreamingOps {
     * scale. The batch twin [[graft.ops.TimeSeries.ohlcResample]] derives
     * the same bars via ROW_NUMBER (the cross-engine-checkable shape);
     * StreamingSpec asserts closed-bar agreement between the two. */
-  def streamingOhlcBars(spark: SparkSession, eventsDir: String): DataFrame =
-    Tables.withNanosAsLong(spark) {
-    val schema = Tables.parquetSchema(spark, eventsDir)
+  def streamingOhlcBars(spark: SparkSession, eventsDir: String): DataFrame = {
+    val schema = Tables.parquetSchema(spark, eventsDir, nanosAsLong = true)
     normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))
@@ -251,9 +248,8 @@ object StreamingOps {
     * dropDuplicatesWithinWatermark on the business key. State stores one
     * row per key seen within the watermark horizon and evicts as the
     * watermark advances — bounded memory on an unbounded stream. */
-  def streamingDedup(spark: SparkSession, eventsDir: String): DataFrame =
-    Tables.withNanosAsLong(spark) {
-    val schema = Tables.parquetSchema(spark, eventsDir)
+  def streamingDedup(spark: SparkSession, eventsDir: String): DataFrame = {
+    val schema = Tables.parquetSchema(spark, eventsDir, nanosAsLong = true)
     normalizeTs(spark.readStream
       .schema(schema)
       .parquet(eventsDir))

@@ -106,31 +106,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.exceptAll(streamed).count() === 0L)
   }
 
-  test("second microbatch still reads nanos parquet after withNanosAsLong restores the conf") {
-    // withNanosAsLong restores spark.sql.legacy.parquet.nanosAsLong before
-    // any microbatch runs; the schema conversion is captured at
-    // readStream-build time. This pins that behavior: if a Spark upgrade
-    // starts re-consulting the conf per batch, the SECOND batch here fails
-    // with [PARQUET_TYPE_ILLEGAL] and surfaces the regression in CI.
+  test("second microbatch still reads nanos parquet with the session conf untouched") {
+    // The source schema reads TIMESTAMP(NANOS) as long through the
+    // resolver's own flag; the session's
+    // spark.sql.legacy.parquet.nanosAsLong is never set, and every
+    // microbatch's scan reads the nanos column into that long field. If a
+    // Spark upgrade starts requiring the conf at scan time, the batches
+    // here fail with [PARQUET_TYPE_ILLEGAL] and surface the regression.
+    val nanos = s"${TestSpark.nanosEventsDir}/events.parquet"
+    val conf = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     val staged = java.nio.file.Files.createTempDirectory("events_two_batches")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("batch1.parquet"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(nanos), staged.resolve("batch1.parquet"))
     val stream = StreamingOps.streamingTumblingCounts(spark, staged.toString)
-    assert(!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-        .contains("true"),
-      "conf must already be restored before the first microbatch")
+    assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong") === conf,
+      "building the stream must leave the session conf alone")
     val q = stream.writeStream
       .format("memory").queryName("two_batch_test")
       .outputMode(OutputMode.Append()).start()
     try {
-      q.processAllAvailable() // batch 1: planned after the restore
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("batch2.parquet"))
+      q.processAllAvailable() // batch 1
+      java.nio.file.Files.copy(java.nio.file.Paths.get(nanos), staged.resolve("batch2.parquet"))
       q.processAllAvailable() // batch 2: a fresh parquet split, same schema path
       assert(q.exception.isEmpty, s"second microbatch failed: ${q.exception}")
-      assert(q.recentProgress.map(_.numInputRows).sum > 0)
+      assert(q.recentProgress.count(_.numInputRows > 0) === 2)
     } finally q.stop()
   }
 
@@ -173,78 +171,69 @@ class StreamingSpec extends AnyFunSuite {
     // windows (no duplicates, no losses), and a restart with nothing new
     // must emit nothing.
     import org.apache.spark.sql.streaming.Trigger
-    val savedNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     val streamDir = java.nio.file.Files.createTempDirectory("events_restart_src")
     val outDir = java.nio.file.Files.createTempDirectory("events_restart_out")
     val ckpt = java.nio.file.Files.createTempDirectory("events_restart_ckpt")
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // encoding-agnostic event-time split: ts has shipped as both
-      // INT64-nanos (read as long under the conf above) and
-      // TIMESTAMP(MICROS) across testdata generations — reduce either to
-      // a monotone long for the midpoint cut, but WRITE the original
-      // column so the staged arrival files keep the source encoding
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      val tsLong = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => col("ts")
-        case _ => unix_micros(col("ts").cast("timestamp"))
-      }
-      val Array(lo, hi) = raw.agg(min(tsLong), max(tsLong)).head()
-        .toSeq.map(_.asInstanceOf[Long]).toArray
-      val mid = lo + (hi - lo) / 2
-
-      def runOnce(): Unit = {
-        val q = StreamingOps.streamingTumblingCounts(spark, streamDir.toString)
-          .writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try assert(q.awaitTermination(120000), "streaming run did not finish")
-        finally q.stop()
-      }
-      def sink() = spark.read.parquet(outDir.toString)
-        .select(col("day_start"), col("event_type"), col("n_events"))
-
-      // arrival batch 1: first half of event time
-      raw.filter(tsLong <= mid).coalesce(1)
-        .write.mode("append").parquet(streamDir.toString)
-      runOnce()
-      val afterFirst = sink().count()
-      assert(afterFirst > 0, "first run must close at least one window")
-
-      // arrival batch 2: the rest; restart from the same checkpoint
-      raw.filter(tsLong > mid).coalesce(1)
-        .write.mode("append").parquet(streamDir.toString)
-      runOnce()
-      val afterSecond = sink().count()
-      assert(afterSecond > afterFirst, "resume must emit the newly closed windows")
-
-      // restart with NO new data: nothing may be re-emitted
-      runOnce()
-      assert(sink().count() === afterSecond, "idle restart must append nothing")
-
-      // no duplicate windows anywhere in the sink
-      assert(sink().select(col("day_start"), col("event_type")).distinct().count()
-        === afterSecond, "restart must not re-emit windows from the first run")
-
-      // and no losses: the sink equals the batch twin on all closed windows
-      val streamed = sink()
-      val maxClosed = streamed.agg(max(col("day_start")))
-        .head().getAs[LocalDateTime](0)
-      val batchClosed = StreamingOps.tumblingDaily(spark, dir)
-        .select(col("day_start"), col("event_type"),
-          col("n_events").cast("long").as("n_events"))
-        .filter(col("day_start") <= lit(maxClosed))
-      assert(streamed.exceptAll(batchClosed).count() === 0L)
-      assert(batchClosed.exceptAll(streamed).count() === 0L)
-    } finally {
-      savedNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
+    // encoding-agnostic event-time split: ts has shipped as both
+    // INT64-nanos (read as long: nanosAsLong) and
+    // TIMESTAMP(MICROS) across testdata generations — reduce either to
+    // a monotone long for the midpoint cut, but WRITE the original
+    // column so the staged arrival files keep the source encoding
+    val raw = Tables.parquet(spark, s"$dir/events.parquet", nanosAsLong = true)
+    val tsLong = raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => col("ts")
+      case _ => unix_micros(col("ts").cast("timestamp"))
     }
+    val Array(lo, hi) = raw.agg(min(tsLong), max(tsLong)).head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    val mid = lo + (hi - lo) / 2
+
+    def runOnce(): Unit = {
+      val q = StreamingOps.streamingTumblingCounts(spark, streamDir.toString)
+        .writeStream.format("parquet")
+        .option("path", outDir.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try assert(q.awaitTermination(120000), "streaming run did not finish")
+      finally q.stop()
+    }
+    def sink() = spark.read.parquet(outDir.toString)
+      .select(col("day_start"), col("event_type"), col("n_events"))
+
+    // arrival batch 1: first half of event time
+    raw.filter(tsLong <= mid).coalesce(1)
+      .write.mode("append").parquet(streamDir.toString)
+    runOnce()
+    val afterFirst = sink().count()
+    assert(afterFirst > 0, "first run must close at least one window")
+
+    // arrival batch 2: the rest; restart from the same checkpoint
+    raw.filter(tsLong > mid).coalesce(1)
+      .write.mode("append").parquet(streamDir.toString)
+    runOnce()
+    val afterSecond = sink().count()
+    assert(afterSecond > afterFirst, "resume must emit the newly closed windows")
+
+    // restart with NO new data: nothing may be re-emitted
+    runOnce()
+    assert(sink().count() === afterSecond, "idle restart must append nothing")
+
+    // no duplicate windows anywhere in the sink
+    assert(sink().select(col("day_start"), col("event_type")).distinct().count()
+      === afterSecond, "restart must not re-emit windows from the first run")
+
+    // and no losses: the sink equals the batch twin on all closed windows
+    val streamed = sink()
+    val maxClosed = streamed.agg(max(col("day_start")))
+      .head().getAs[LocalDateTime](0)
+    val batchClosed = StreamingOps.tumblingDaily(spark, dir)
+      .select(col("day_start"), col("event_type"),
+        col("n_events").cast("long").as("n_events"))
+      .filter(col("day_start") <= lit(maxClosed))
+    assert(streamed.exceptAll(batchClosed).count() === 0L)
+    assert(batchClosed.exceptAll(streamed).count() === 0L)
   }
 
   test("foreachBatch incremental merge converges to the batch aggregate") {
@@ -259,72 +248,63 @@ class StreamingSpec extends AnyFunSuite {
     val streamDir = java.nio.file.Files.createTempDirectory("events_merge_src")
     val snapRoot = java.nio.file.Files.createTempDirectory("events_merge_snap")
     val ckpt = java.nio.file.Files.createTempDirectory("events_merge_ckpt")
-    val savedNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // normalize ts to a LONG up front (nanos pass through; micros via
-      // unix_micros) — this stream is read back with raw.schema by the
-      // test's own readStream, so a long column round-trips cleanly and
-      // the Long.MinValue sentinel below stays type-correct
-      val raw0 = spark.read.parquet(s"$dir/events.parquet")
-      val raw = (raw0.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => raw0
-        case _ => raw0.withColumn("ts", unix_micros(col("ts").cast("timestamp")))
-      }).select(col("user_id"), col("ts"))
-      // three arrival chunks, one file each → 3 micro-batches at
-      // maxFilesPerTrigger=1
-      val Array(lo, hi) = raw.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[Long]).toArray
-      val cut1 = lo + (hi - lo) / 3
-      val cut2 = lo + 2 * ((hi - lo) / 3)
-      Seq(col("ts") <= cut1, col("ts") > cut1 && col("ts") <= cut2,
-        col("ts") > cut2).foreach { p =>
-        raw.filter(p).coalesce(1).write.mode("append").parquet(streamDir.toString)
-      }
-
-      val current = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      def mergeBatch(batch: DataFrame, id: Long): Unit = {
-        val s = batch.sparkSession
-        val agg = batch.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
-        val prev = Option(current.get()).map(s.read.parquet(_))
-          .getOrElse(s.emptyDataFrame
-            .select(lit(0L).as("user_id"), lit(0L).as("n"), lit(0L).as("last_ts"))
-            .limit(0))
-        val merged = prev.as("p").join(agg.as("b"), Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            (coalesce(col("p.n"), lit(0L)) + coalesce(col("b.n"), lit(0L))).as("n"),
-            greatest(coalesce(col("p.last_ts"), lit(Long.MinValue)),
-              coalesce(col("b.last_ts"), lit(Long.MinValue))).as("last_ts"))
-        val next = s"$snapRoot/v${nBatches.incrementAndGet()}"
-        merged.write.mode("overwrite").parquet(next)
-        current.set(next)
-      }
-
-      val q = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-        .writeStream
-        .foreachBatch(mergeBatch _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try assert(q.awaitTermination(120000), "merge stream did not finish")
-      finally q.stop()
-
-      assert(nBatches.get() === 3, s"expected 3 micro-batches, got ${nBatches.get()}")
-      val streamed = spark.read.parquet(current.get())
-      val batchTwin = raw.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
-      assert(streamed.exceptAll(batchTwin).count() === 0L)
-      assert(batchTwin.exceptAll(streamed).count() === 0L)
-    } finally {
-      savedNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
+    // normalize ts to a LONG up front (nanos pass through; micros via
+    // unix_micros) — this stream is read back with raw.schema by the
+    // test's own readStream, so a long column round-trips cleanly and
+    // the Long.MinValue sentinel below stays type-correct
+    val raw0 = Tables.parquet(spark, s"$dir/events.parquet", nanosAsLong = true)
+    val raw = (raw0.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => raw0
+      case _ => raw0.withColumn("ts", unix_micros(col("ts").cast("timestamp")))
+    }).select(col("user_id"), col("ts"))
+    // three arrival chunks, one file each → 3 micro-batches at
+    // maxFilesPerTrigger=1
+    val Array(lo, hi) = raw.agg(min(col("ts")), max(col("ts"))).head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    val cut1 = lo + (hi - lo) / 3
+    val cut2 = lo + 2 * ((hi - lo) / 3)
+    Seq(col("ts") <= cut1, col("ts") > cut1 && col("ts") <= cut2,
+      col("ts") > cut2).foreach { p =>
+      raw.filter(p).coalesce(1).write.mode("append").parquet(streamDir.toString)
     }
+
+    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
+    def mergeBatch(batch: DataFrame, id: Long): Unit = {
+      val s = batch.sparkSession
+      val agg = batch.groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
+      val prev = Option(current.get()).map(s.read.parquet(_))
+        .getOrElse(s.emptyDataFrame
+          .select(lit(0L).as("user_id"), lit(0L).as("n"), lit(0L).as("last_ts"))
+          .limit(0))
+      val merged = prev.as("p").join(agg.as("b"), Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          (coalesce(col("p.n"), lit(0L)) + coalesce(col("b.n"), lit(0L))).as("n"),
+          greatest(coalesce(col("p.last_ts"), lit(Long.MinValue)),
+            coalesce(col("b.last_ts"), lit(Long.MinValue))).as("last_ts"))
+      val next = s"$snapRoot/v${nBatches.incrementAndGet()}"
+      merged.write.mode("overwrite").parquet(next)
+      current.set(next)
+    }
+
+    val q = spark.readStream.schema(raw.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(streamDir.toString)
+      .writeStream
+      .foreachBatch(mergeBatch _)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try assert(q.awaitTermination(120000), "merge stream did not finish")
+    finally q.stop()
+
+    assert(nBatches.get() === 3, s"expected 3 micro-batches, got ${nBatches.get()}")
+    val streamed = spark.read.parquet(current.get())
+    val batchTwin = raw.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
+    assert(streamed.exceptAll(batchTwin).count() === 0L)
+    assert(batchTwin.exceptAll(streamed).count() === 0L)
   }
 
   test("dropDuplicatesWithinWatermark over an event-time-ordered source equals the batch twin") {
@@ -332,8 +312,7 @@ class StreamingSpec extends AnyFunSuite {
     // == event-time order, streaming first-arrival dedup equals the batch
     // keep-earliest twin exactly.
     val staged = java.nio.file.Files.createTempDirectory("events_dedup_stream")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    Tables.parquet(spark, s"$dir/events.parquet", nanosAsLong = true)
       .orderBy(col("ts"), col("event_id"))
       .coalesce(1)
       .write.mode("overwrite").parquet(staged.toString)

@@ -23,6 +23,9 @@
 #     streaming/ — those inputs resolve through Tables.parquet, whose schema
 #     comes from an in-process footer read instead of Spark's one-job
 #     schema inference
+#  9. no conf.set( or conf.unset( in src/main — no library call may change
+#     a shared session's conf (a toggle races every concurrent query on
+#     that session); per-read behaviour goes in the read itself
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -77,6 +80,11 @@ if grep -rnF '.read.parquet(' src/main/scala/graft/Tables.scala \
     src/main/scala/graft/SparkEntry.scala src/main/scala/graft/features \
     src/main/scala/graft/streaming --include='*.scala'; then
   say "FAIL: .read.parquet( on a Tables.parquet input (schema-inference job)"; fail=1
+fi
+
+# 9. session-conf writes from library code
+if grep -rnE 'conf\.(set|unset)\(' src/main --include='*.scala'; then
+  say "FAIL: conf.set( / conf.unset( in src/main (shared session conf)"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
